@@ -13,11 +13,19 @@ This module is the same contract:
 * ``<combined>``: written in the reference's job-1 byte format
   (``0\\t{referrer/x1fadId/x1e<flag>`` lines) for interoperability with
   tooling that consumed the reference's intermediate — the engine itself
-  does NOT read it back (one DAG, no materialization barrier).
+  does NOT read it back.
 * ``<output>``: the reference's job-2 text shape ``[url, adID]\\t<ctr>``,
-  with the CTR rendered through float32 shortest-roundtrip formatting to
-  match Java's ``Float.toString`` (the reference computes CTR in 32-bit
-  float, ``ClickThru.java:179-186``).
+  with the CTR rendered as Java's ``Float.toString`` of a 32-bit float (the
+  reference computes CTR in 32-bit float, ``ClickThru.java:179-186``).
+
+Both sinks come from one per-impression reduce
+(``operators.clickthru.per_impression``): one scan of both dirs and one
+shuffle on ``impressionId`` replace two DAGs that each ran a ``distinct``
+and a join.  The frame is ``persist``ed for the two writes and unpersisted
+afterwards; unlike ``localCheckpoint``, a persisted frame keeps its lineage,
+so a lost block is recomputed rather than failing the job.  The group count
+comes from an ``Observation`` on the output write, not from a second run of
+the DAG, and the CTR is rendered by a JVM cast, so no Python worker starts.
 """
 
 from __future__ import annotations
@@ -80,54 +88,29 @@ def main(argv: list[str]) -> int:
         return 1
     impressions, clicks, combined, output = argv
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from hadoopmapreduce_spark.functions.javafmt import java_f32_str
-
     from hadoopmapreduce_spark.operators.clickthru import (
-        IMPRESSION_SCHEMA,
-        run_clickthru,
+        combined_lines,
+        ctr_from_per_impression,
+        ctr_lines,
+        per_impression,
     )
     from hadoopmapreduce_spark.session import get_spark
-    from hadoopmapreduce_spark.sources.jsonlines import read_jsonlines_tolerant
 
     spark = get_spark("clickthru-cli")
 
-    # intermediate dir in the reference's job-1 byte format (compat artifact
-    # only — the CTR below is computed from one lazy DAG, not from this file)
-    rows = read_jsonlines_tolerant(spark, impressions, IMPRESSION_SCHEMA).unionByName(
-        read_jsonlines_tolerant(spark, clicks, IMPRESSION_SCHEMA)
-    ).filter(F.col("impressionId").isNotNull())
-    impr = rows.filter(F.col("referrer").isNotNull())
-    clk = rows.filter(F.col("referrer").isNull()).select("impressionId").distinct()
-    flagged = impr.join(
-        clk.withColumn("_c", F.lit(1)), "impressionId", "left"
-    ).select(
-        F.concat(
-            F.lit("0\t{"),
-            F.col("referrer"),
-            F.lit("/x1f"),
-            F.col("adId"),
-            F.lit("/x1e"),
-            F.when(F.col("_c").isNotNull(), F.lit("1")).otherwise(F.lit("0")),
-        ).alias("value")
-    )
-    flagged.write.mode("overwrite").text(combined)
-
-    result = run_clickthru(spark, impressions, clicks)
-
-    lines = result.select(
-        F.concat(
-            F.lit("["),
-            F.col("referrer"),
-            F.lit(", "),
-            F.col("ad_id"),
-            F.lit("]\t"),
-            java_f32_str(F.col("ctr")),
-        ).alias("value")
-    )
-    lines.write.mode("overwrite").text(output)
-    print(f"CTR written to {output} ({result.count()} groups)")
+    per_id = per_impression(spark, impressions, clicks).persist()
+    try:
+        combined_lines(per_id).write.mode("overwrite").text(combined)
+        groups = Observation("ctr_groups")
+        ctr_lines(ctr_from_per_impression(per_id)).observe(
+            groups, F.count(F.lit(1)).alias("n")
+        ).write.mode("overwrite").text(output)
+        print(f"CTR written to {output} ({groups.get['n']} groups)")
+    finally:
+        per_id.unpersist()
     return 0
 
 

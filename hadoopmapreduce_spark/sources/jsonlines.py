@@ -17,9 +17,11 @@ from pyspark.sql import types as T
 
 
 def read_jsonlines_tolerant(
-    spark: SparkSession, path: str, schema: T.StructType
+    spark: SparkSession, path: str | list[str], schema: T.StructType
 ) -> DataFrame:
     """Read junk-prefix-tolerant JSON lines into a typed DataFrame.
+
+    ``path`` is one directory or a list of them, read as one scan.
 
     ``spark.read.text`` (splittable, parallel) → substring from the first
     ``{`` → ``from_json`` with an explicit schema (no inference pass over

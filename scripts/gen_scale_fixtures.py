@@ -10,14 +10,15 @@ documented fixture shapes — ~4 lineitems/order, ~80-char term-soup docs with
 a near-dup tail, 10-cluster embeddings), making wall-time ratios meaningful
 even if absolute times differ slightly from the driver fixtures.
 
-Usage: python scripts/gen_scale_fixtures.py 0.1 0.3
-Writes /root/repo/scale_fixtures/sf{SF}/{table}.parquet
+Usage: python scripts/gen_scale_fixtures.py [--out-dir DIR] 0.1 0.3
+Writes DIR/sf{SF}/{table}.parquet; DIR defaults to scale_fixtures/ at the
+root of the checkout.
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -41,9 +42,9 @@ def _ts_ms(days: np.ndarray, base: str) -> pa.Array:
     )
 
 
-def generate(sf: float) -> None:
+def generate(sf: float, out_base: str = OUT_BASE) -> None:
     rng = np.random.default_rng(42)
-    out = os.path.join(OUT_BASE, f"sf{sf}")
+    out = os.path.join(out_base, f"sf{sf}")
     os.makedirs(out, exist_ok=True)
 
     n_cust = int(150_000 * sf)
@@ -268,5 +269,9 @@ def generate(sf: float) -> None:
 
 
 if __name__ == "__main__":
-    for sf_arg in sys.argv[1:] or ["0.1", "0.3"]:
-        generate(float(sf_arg))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out-dir", default=OUT_BASE)
+    ap.add_argument("sf", nargs="*", type=float, default=[0.1, 0.3])
+    args = ap.parse_args()
+    for sf in args.sf:
+        generate(sf, args.out_dir)

@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _fixture(tmp_path):
@@ -16,6 +19,8 @@ def _fixture(tmp_path):
         '{"impressionId": "i1", "referrer": "u1", "adId": "a1"}\n'
         '{"impressionId": "i2", "referrer": "u1", "adId": "a1"}\n'
         '{"impressionId": "i3", "referrer": "u2", "adId": "a2"}\n'
+        # E1: no adId, so no job-2 key — dropped from both sinks
+        '{"impressionId": "i6", "referrer": "u2"}\n'
     )
     (clk / "part-0000").write_text('{"impressionId": "i1"}\n')
     return imp, clk
@@ -26,7 +31,7 @@ def test_cli_usage_error():
         [sys.executable, "-m", "hadoopmapreduce_spark", "one", "two"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc.returncode == 1
     assert "usage:" in proc.stderr
@@ -49,6 +54,8 @@ def test_java_float_rendering_golden():
     assert r(float("nan")) == "NaN"
     assert r(float("inf")) == "Infinity"
     assert r(-0.5) == "-0.5"
+    # JDK >= 19: a one-digit shortest form competes with the two-digit ones
+    assert r(1.4e-45) == "1.4E-45"  # Float.MIN_VALUE
 
 
 def test_java_float_rendering_column(spark):
@@ -62,6 +69,62 @@ def test_java_float_rendering_column(spark):
     assert [row.s for row in df.orderBy("s").collect()] == [
         "0.0", "0.5", "1.0E-4", "2.4414062E-4"
     ]
+
+
+def test_java_f32_str_matches_reference_sweep(spark):
+    """The JVM cast renders every CTR c/t with t <= 1000, and the golden
+    specials, exactly as the Python statement of Java's rule."""
+    from pyspark.sql import functions as F
+
+    from hadoopmapreduce_spark.functions.javafmt import (
+        java_f32_str,
+        java_float32_repr,
+    )
+
+    t = spark.range(1, 1001).withColumnRenamed("id", "t")
+    c = spark.range(0, 1001).withColumnRenamed("id", "c")
+    ratios = (
+        t.crossJoin(c).where("c <= t").select((F.col("c") / F.col("t")).alias("x"))
+    ).distinct()  # not applied to the specials: it would fold -0.0 into 0.0
+    specials = spark.createDataFrame(
+        [(float(v),) for v in ("nan", "inf", "-inf", 0.0, -0.0, 1e7, 9999999.0, 1e-4)],
+        "x double",
+    )
+    rows = ratios.unionByName(specials).select(
+        "x", java_f32_str(F.col("x")).alias("s")
+    ).collect()
+    assert len(rows) > 300_000
+    bad = [(r.x, r.s) for r in rows if r.s != java_float32_repr(r.x)]
+    assert not bad, bad[:10]
+
+
+def test_cli_sinks_share_one_persisted_frame(spark, tmp_path):
+    """Both sinks read one persisted per-impression frame: the output sink
+    scans the cache instead of the input, no sink plan evaluates Python,
+    and the frame is released when the call returns."""
+    from hadoopmapreduce_spark.__main__ import main
+
+    imp, clk = _fixture(tmp_path)
+    combined, output = tmp_path / "combined", tmp_path / "out"
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert main([str(imp), str(clk), str(combined), str(output)]) == 0
+
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() not in seen]
+    out_plans = [p for p in plans if str(output) in p]
+    assert len(out_plans) == 1 and any(str(combined) in p for p in plans)
+    assert "InMemoryTableScan" in out_plans[0]
+    assert "FileScan" not in out_plans[0]
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_cli_end_to_end(tmp_path):
@@ -80,10 +143,11 @@ def test_cli_end_to_end(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "(2 groups)" in proc.stdout
 
     out_lines = sorted(
         line
@@ -115,6 +179,7 @@ def test_cli_list_subcommand():
         [sys.executable, "-m", "hadoopmapreduce_spark", "list"],
         capture_output=True,
         text=True,
+        cwd=REPO,
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -133,6 +198,7 @@ def test_cli_unknown_query_errors():
         [sys.executable, "-m", "hadoopmapreduce_spark", "run", "nope", "/tmp"],
         capture_output=True,
         text=True,
+        cwd=REPO,
         timeout=120,
     )
     assert proc.returncode == 1

@@ -21,6 +21,9 @@ def fixture_dirs(tmp_path):
         '{"impressionId": "i5", "referrer": "u2", "adId": "a1"}',
         # E1: malformed JSON line — must be quarantined, not duplicated
         "this is not json at all",
+        # E1: an impression with no adId has no (referrer, adId) key — dropped,
+        # not grouped under a null adId
+        '{"impressionId": "i6", "referrer": "u2"}',
     ]
     clicks = [
         '{"impressionId": "i1"}',
@@ -80,5 +83,5 @@ def test_observed_corruption_metrics(spark, fixture_dirs):
     imp_dir, _ = fixture_dirs
     df, obs = read_jsonlines_observed(spark, imp_dir, IMPRESSION_SCHEMA)
     n_valid = df.filter(df._corrupt.isNull()).count()  # the action
-    assert obs.get == {"n_rows": 7, "n_corrupt": 1}
-    assert n_valid == 6
+    assert obs.get == {"n_rows": 8, "n_corrupt": 1}
+    assert n_valid == 7

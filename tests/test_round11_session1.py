@@ -27,7 +27,7 @@ def test_semdedup_g_is_one_at_fixture_sfs():
     ) == 9
 
 
-def test_semdedup_seed_split_engages_at_scale(spark):
+def test_semdedup_seed_split_engages_at_scale(spark, scale_sf09_dir):
     """At the sf0.9 probe fixture the assignment must spread over ~K=90
     derived clusters with per-cluster size ~TARGET_M, not the 10 label
     cells (the r10 fixture-K quadratic read 14.6x wall at 9x data)."""
@@ -37,7 +37,7 @@ def test_semdedup_seed_split_engages_at_scale(spark):
     )
 
     sizes = (
-        semantic_assignment(spark, "/root/repo/scale_fixtures/sf0.9")
+        semantic_assignment(spark, scale_sf09_dir)
         .groupBy("cluster")
         .count()
         .collect()
@@ -257,7 +257,7 @@ def test_louvain_conflict_free_selection_is_community_unique(spark):
         touched.add(r["c"])
 
 
-def test_topn_pandas_path_matches_fold(spark):
+def test_topn_pandas_path_matches_fold(spark, scale_sf09_dir):
     """The Arrow-vectorized dimension-major scorer must reproduce the
     in-row fold's assignment BIT-FOR-BIT (same accumulation order, same
     NaN/tie rules) — checked at the sf0.9 probe fixture where both
@@ -268,8 +268,9 @@ def test_topn_pandas_path_matches_fold(spark):
         topn_probes_from_parts,
     )
 
-    sf_dir = "/root/repo/scale_fixtures/sf0.9"
-    e, cent1, nrm, scored_arr, g = _semantic_assignment_parts(spark, sf_dir)
+    e, cent1, nrm, scored_arr, g = _semantic_assignment_parts(
+        spark, scale_sf09_dir
+    )
     assert g == 9
     # fold path restricted to a slice (the full K=90 interpreted fold is
     # the measured-slow path this scorer replaces)
