@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
-# (abspath(sf_dir), table, size, mtime_ns) -> StructType; see load_table.
+# (abspath(sf_dir), table, size, mtime_ns) -> StructType; see table_schema.
 # size+mtime in the key (ADVICE r13): a fixture regenerated mid-process at
 # the same path with a different schema must MISS, or reads would pass a
 # stale explicit schema and parquet silently nulls missing/renamed columns.
@@ -57,27 +57,20 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     _CONFIGURED_SESSIONS.add(spark)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Plain parquet scan — kept lazy so Catalyst can
-    prune columns/row-groups per consuming query.
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The on-disk schema of one fixture table, as the reader sees it under
+    the session confs ``load_table`` depends on.
 
-    ``events.ts`` has shipped in two fixture generations: INT64
-    TIMESTAMP(NANOS) (surfaced as ``long`` via ``nanosAsLong``, converted to a
-    microsecond ``timestamp`` by integer division — the same truncation DuckDB
-    applies, so oracle parity holds) and, since round 4, plain
-    TIMESTAMP(MICROS) (no conversion needed).  Branch on the type actually
-    read so both generations load identically.
-    """
+    This is the metastore role: ``spark.read.parquet()`` infers the schema
+    EAGERLY (a footer-read JVM round trip per call, ~40-170 ms), and every
+    query would pay it 1-4x per build.  The fixture files are immutable per
+    (dir, table) within a session, so the schema is cached; scan-time footer
+    reads (row groups, stats, pushdown) are unaffected.  Metadata only,
+    never row data."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    # Schema cache — the metastore role: spark.read.parquet() infers the
-    # schema EAGERLY (a footer-read JVM round trip per call, ~40-170 ms),
-    # and every query pays it 1-4× per build.  The fixture files are
-    # immutable per (dir, table) within a session, so the DDL is cached
-    # and passed explicitly; scan-time footer reads (row groups, stats,
-    # pushdown) are unaffected.  Metadata only — never row data.
     try:
         st = os.stat(path)  # works for single files AND dataset directories
         sig = (st.st_size, st.st_mtime_ns)
@@ -87,17 +80,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (os.path.abspath(sf_dir), name, *sig)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table. Plain parquet scan — kept lazy so Catalyst can
+    prune columns/row-groups per consuming query.  The schema is passed
+    explicitly, from ``table_schema``'s cache.
+
+    ``events.ts`` has shipped in two fixture generations: INT64
+    TIMESTAMP(NANOS) (surfaced as ``long`` via ``nanosAsLong``, converted to a
+    microsecond ``timestamp`` by integer division — the same truncation DuckDB
+    applies, so oracle parity holds) and, since round 4, plain
+    TIMESTAMP(MICROS) (no conversion needed).  Branch on the type actually
+    read so both generations load identically.
+    """
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        if isinstance(df.schema["ts"].dataType, LongType):
+        if isinstance(schema["ts"].dataType, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         else:
             # New fixtures store TIMESTAMP_NTZ; surface as TIMESTAMP (LTZ,
-            # session tz pinned UTC above) so downstream epoch math
-            # (``ts.cast("bigint")`` etc.) keeps working — NTZ forbids it.
+            # session tz pinned UTC by _ensure_session_confs) so downstream
+            # epoch math (``ts.cast("bigint")`` etc.) keeps working — NTZ
+            # forbids it.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
@@ -120,6 +128,43 @@ def _size_bytes(conf_value: str) -> int:
     elif s.endswith("b"):
         s = s[:-1]
     return int(float(s)) * mult
+
+
+def _conf_bytes(spark: SparkSession, key: str, default: str) -> int:
+    """A byte-size session conf, or ``default`` when it is unset or does
+    not parse."""
+    try:
+        return _size_bytes(spark.conf.get(key, default))
+    except ValueError:
+        return _size_bytes(default)
+
+
+def _path_bytes(path: str) -> int:
+    """Bytes of a file, or of every file under a directory."""
+    if os.path.isdir(path):
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(path)
+            for f in files
+        )
+    return os.path.getsize(path) if os.path.exists(path) else 0
+
+
+def replay_partitions(spark: SparkSession, *paths: str) -> int:
+    """Shuffle-partition count for a finite streaming replay of ``paths``:
+    ``min(defaultParallelism, ceil(replay bytes / maxPartitionBytes))``,
+    at least 1.
+
+    Stateful streaming disables AQE, so every shuffle partition carries a
+    full state-store instance (a stream-stream join keeps four per
+    partition), each committed per micro-batch, for the life of the query.
+    A replay smaller than one scan split gains nothing from more than one.
+    The count only changes how keys are spread, never an aggregate's or a
+    join's answer."""
+    max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "128m")
+    total = sum(_path_bytes(p) for p in paths)
+    par = spark.sparkContext.defaultParallelism
+    return max(1, min(par, -(-total // max_part)))
 
 
 def spread_for_expansion(
@@ -149,18 +194,8 @@ def spread_for_expansion(
     is)."""
     if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":  # measurement A/B
         return df
-    try:
-        max_part = _size_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-    except Exception:
-        max_part = 128 << 20
-    try:
-        open_cost = _size_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-        )
-    except Exception:
-        open_cost = 4 << 20
+    max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "128m")
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", "4m")
     sizes: list[tuple[int, str]] = []  # (bytes, path) per data file
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
@@ -331,7 +366,9 @@ def work_dir(name: str, sf_dir: str, fresh: bool = False) -> str:
     return path
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for the SQL-API paths)."""
-    for name in TABLES:
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+    """Register fixture tables as temp views (for the SQL-API paths): the
+    ``names`` given, else every table in ``TABLES``.  A query passes the
+    tables its SQL text reads, so it loads only those."""
+    for name in names or TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

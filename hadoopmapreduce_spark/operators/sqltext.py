@@ -3,8 +3,9 @@ first-class registered query.
 
 Every other query in the registry declares its plan through the DataFrame
 API; a user of the reference switching to this engine also gets plain SQL
-over the catalog (``register_views`` publishes every fixture table as a
-temp view; ``python -m hadoopmapreduce_spark run`` executes either form).
+over the catalog (``register_views`` publishes the fixture tables a text
+reads as temp views; ``python -m hadoopmapreduce_spark run`` executes
+either form).
 This module pins that surface with queries whose Spark SQL string IS the
 oracle string — one text, two engines — restricted to the shared
 ANSI dialect both Spark and DuckDB parse identically (typed DATE literals,
@@ -56,7 +57,7 @@ def sql_shared_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the DataFrame layer.  Catalyst plans text and DataFrame forms into
     the same physical tree (broadcast dims, partial aggs); nothing
     perf-relevant changes at any scale."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders", "customer", "nation")
     return spark.sql(SHARED_REVENUE_SQL)
 
 
@@ -67,7 +68,7 @@ def sql_shared_ctr(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL text over the events fixture — view events joined against the
     distinct set of converting users.  The DISTINCT subquery is
     load-bearing exactly as in the reference (N purchases count once)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "events")
     return spark.sql(SHARED_CTR_SQL)
 
 
@@ -108,7 +109,7 @@ def sql_shared_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     transformation — the check pins the semantics of the rewrite, not
     either engine's plan.  Decorrelated, this is two shuffles on custkey
     at any scale; the naive per-row evaluation it replaces is quadratic."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(SHARED_CORRELATED_SQL)
 
 
@@ -146,7 +147,7 @@ def sql_shared_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — one fact scan for all levels, the same 100 TB shape as
     the rollup queries (x3 expansion rows, each narrower than the
     input)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders", "customer", "nation")
     return spark.sql(SHARED_GROUPING_SETS_SQL)
 
 
@@ -187,5 +188,5 @@ def sql_shared_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank-over-region + filter), NOT an N-per-outer-row rescan — the
     5-row outer table makes that visible in PLANS.md; with a large outer
     table the same rewrite keeps it a single joined pass."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "region", "orders", "customer", "nation")
     return spark.sql(SHARED_LATERAL_SQL)

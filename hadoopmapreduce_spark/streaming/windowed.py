@@ -19,14 +19,19 @@ state: watermarks bound state size, windows partition naturally by
 
 from __future__ import annotations
 
+import contextlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from hadoopmapreduce_spark.catalog import load_table, work_dir
+from hadoopmapreduce_spark.catalog import (
+    load_table,
+    replay_partitions,
+    table_schema,
+    work_dir,
+)
 from hadoopmapreduce_spark.registry import query
 
 
@@ -41,11 +46,10 @@ def _events_stream(
     ``max_files_per_trigger`` splits a multi-file fixture into several
     micro-batches under ``availableNow`` — used by tests to exercise
     cross-batch state/merge paths a one-batch replay can't reach."""
-    # load_table is called for its session-conf side effects (UTC tz +
-    # nanosAsLong) so old-generation fixtures resolve ts as long
-    load_table(spark, sf_dir, "events")
+    # the catalog's cached schema, read under its session confs (UTC tz +
+    # nanosAsLong, so old-generation fixtures resolve ts as long)
+    raw_schema = table_schema(spark, sf_dir, "events")
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(raw_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -72,10 +76,12 @@ def _run_stream_to_parquet(
     out: DataFrame,
     name: str,
     output_mode: str = "complete",
-    sf_dir: str | None = None,
+    *,
+    sf_dir: str,
 ) -> DataFrame:
-    """Execute a finite streaming query (``availableNow`` trigger) with a
-    parquet file sink via ``foreachBatch``, then read the result back.
+    """Execute a finite streaming query (``availableNow`` trigger) over the
+    events table under ``sf_dir`` with a parquet file sink via
+    ``foreachBatch``, then read the result back with the stream's schema.
 
     ``foreachBatch`` + overwrite is the standard pattern for sinking a
     windowed aggregation in ``complete``/``update`` mode to files (the plain
@@ -83,31 +89,18 @@ def _run_stream_to_parquet(
     window the final watermark hasn't passed).  Data flows executors→files;
     the driver never materializes rows.
 
-    With ``sf_dir`` the scratch dir is deterministic per (query, fixture)
-    and wiped per call (fresh checkpoint is REQUIRED — a stale one marks
-    the replay as already processed and the sink sees nothing), bounding
-    /tmp growth across repeated invocations."""
-    if sf_dir is not None:
-        outdir = work_dir(f"stream_{name}", sf_dir, fresh=True)
-    else:
-        outdir = tempfile.mkdtemp(prefix=f"hmr_{name}_")
+    The scratch dir is deterministic per (query, fixture) and wiped per
+    call (fresh checkpoint is REQUIRED — a stale one marks the replay as
+    already processed and the sink sees nothing), bounding /tmp growth
+    across repeated invocations."""
+    outdir = work_dir(f"stream_{name}", sf_dir, fresh=True)
     target = os.path.join(outdir, "result")
     write_mode = "overwrite" if output_mode == "complete" else "append"
 
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
         batch_df.write.mode(write_mode).parquet(target)
 
-    # Stateful streaming disables AQE, so every shuffle partition carries a
-    # full state-store instance (a stream-stream join keeps FOUR per
-    # partition) for the life of the query — size the partition count to
-    # the replayed volume instead of inheriting the batch-tuned setting.
-    # Result-invariant: partitioning never changes agg/join answers.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
-    try:
+    with _replay_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
         q = (
             out.writeStream.outputMode(output_mode)
             .foreachBatch(_sink)
@@ -116,9 +109,22 @@ def _run_stream_to_parquet(
             .start()
         )
         q.awaitTermination()
+    return spark.read.schema(out.schema).parquet(target)
+
+
+@contextlib.contextmanager
+def _replay_shuffle(spark: SparkSession, *replay: str):
+    """Scope ``spark.sql.shuffle.partitions`` to ``replay_partitions`` of
+    the replayed files while a stateful streaming query runs, instead of
+    the batch-tuned session setting (see ``catalog.replay_partitions``)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(replay_partitions(spark, *replay))
+    )
+    try:
+        yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(target)
 
 
 def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
@@ -670,9 +676,8 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # order by construction, not by write-latency accident
         os.utime(dst, (1_700_000_000 + 100 * i,) * 2)
 
-    schema = spark.read.parquet(replay).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
     )
@@ -692,12 +697,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             target
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
-    try:
+    with _replay_shuffle(spark, replay):
         q = (
             out.writeStream.outputMode("update")
             .foreachBatch(_sink)
@@ -706,8 +706,6 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     emitted = spark.read.parquet(target)
     last = W.partitionBy("window_start", "event_type").orderBy(F.desc("epoch"))
@@ -718,7 +716,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two scalar actions (replay size, surviving total) — audit arithmetic,
     # not a data-sized collect
-    replayed = spark.read.parquet(replay).count()
+    replayed = spark.read.schema(ev.schema).parquet(replay).count()
     survived = final.agg(F.sum("n_events").cast("long")).collect()[0][0] or 0
     audit = spark.createDataFrame(
         [(None, "__late_dropped__", replayed - survived)],
@@ -818,9 +816,8 @@ def streaming_dim_refresh_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.move(part, dst)
         os.utime(dst, (1_700_000_000 + 100 * i,) * 2)
 
-    schema = spark.read.parquet(replay).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(replay)
         .filter(F.col("event_type") == "purchase")
@@ -839,12 +836,7 @@ def streaming_dim_refresh_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             _shutil.rmtree(current)
             _shutil.move(pending, current)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
-    try:
+    with _replay_shuffle(spark, replay):
         q = (
             stream.writeStream.outputMode("append")
             .foreachBatch(_enrich)
@@ -853,8 +845,6 @@ def streaming_dim_refresh_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     return (
         spark.read.parquet(target)
