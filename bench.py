@@ -25,39 +25,26 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoopmapreduce_spark import registry  # noqa: E402
-from hadoopmapreduce_spark.functions import ranks  # noqa: E402
 from hadoopmapreduce_spark.operators import graph  # noqa: E402
 from hadoopmapreduce_spark.session import get_spark  # noqa: E402
 
 
 def _drain_caches() -> None:
-    """Release the rank AND graph cache registries (family boundaries).
+    """Release the graph cache registry (family boundaries).
 
-    Both modules accumulate resident tables per call (distributed_ntile's
-    checkpointed range-partitioned projections, graph's cached oriented
-    edge tables); left undrained across the 300-query suite they build
-    storage pressure that evicts the hot fixture mid-bench — the exact
-    failure mode the release hooks exist to prevent (graph.py docstring).
-    The two registries differ in reuse (ADVICE r8): graph caches go
-    through ``cache()``, which Spark's CacheManager dedupes by logical
-    plan, so the graph cohort legitimately shares ONE resident edge table
-    across queries — drained per FAMILY (the suite runs queries sorted by
-    name, so families are contiguous), which is how every prior round's
-    committed numbers were measured.  distributed_ntile uses eager
-    ``localCheckpoint``, which is NOT deduped — every run of every ntile
-    query materializes a fresh resident copy with zero cross-run reuse —
-    so rank caches are additionally drained per QUERY (``_drain_ranks``),
-    bounding them to one query's runs with nothing lost.  Safe because
+    graph accumulates resident tables per call (its cached oriented edge
+    tables); left undrained across the 300-query suite they build storage
+    pressure that evicts the hot fixture mid-bench — the exact failure
+    mode the release hook exists to prevent (graph.py docstring).  Graph
+    caches go through ``cache()``, which Spark's CacheManager dedupes by
+    logical plan, so the graph cohort legitimately shares ONE resident
+    edge table across queries — drained per FAMILY (the suite runs
+    queries sorted by name, so families are contiguous), which is how
+    every prior round's committed numbers were measured.  Safe because
     each timed query has been fully materialized by the noop write before
     any drain runs."""
-    ranks.release_rank_caches()
     graph.release_graph_caches()
 
-
-def _drain_ranks() -> None:
-    """Per-query rank-cache drain — see _drain_caches for why ranks (no
-    cross-run reuse) drain more aggressively than graph (deduped)."""
-    ranks.release_rank_caches()
 
 SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
 
@@ -272,7 +259,6 @@ def main() -> None:
         timings[name] = round(best, 3)
         if best >= 0:
             segment_walls[-1] += best
-        _drain_ranks()  # checkpointed ntile tables get no cross-run reuse
         n_done += 1
         if n_done % CANARY_EVERY == 0:
             canary_series.append([n_done, round(_run_canary(spark, sf_dir), 3)])

@@ -40,7 +40,7 @@ usage: python -m hadoopmapreduce_spark <impressions> <clicks> <combined> <out>
 
 
 def _registry_main(argv: list[str]) -> int:
-    """Registry subcommands: list / run / explain over the 180+ registered
+    """Registry subcommands: list / run / explain over the registered
     queries — the engine as a standalone tool, beyond the reference's
     4-arg CTR contract (which stays byte-compatible below)."""
     from hadoopmapreduce_spark import registry

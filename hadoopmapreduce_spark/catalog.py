@@ -192,8 +192,6 @@ def spread_for_expansion(
     and never changes keyed-aggregation/join results — apply it only
     upstream of order-insensitive logic (everything oracle-checked here
     is)."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD") == "1":  # measurement A/B
-        return df
     max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "128m")
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", "4m")
     sizes: list[tuple[int, str]] = []  # (bytes, path) per data file
@@ -269,9 +267,7 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # when its FREE space covers the expected write plus this reserve;
 # $SPARK_GRAFT_SCRATCH overrides unconditionally for operators who know
 # their host.
-SHM_RESERVE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SHM_RESERVE", str(2 << 30))
-)
+SHM_RESERVE_BYTES = 2 << 30
 
 
 def _free_bytes(path: str) -> int:

@@ -28,19 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# references to the localCheckpointed range-partitioned tables: the
-# prefix-count action and the returned plan both read them.  Eager
-# localCheckpoint (not cache()) because correctness DEPENDS on both reads
-# seeing the same partitioning: a cache-evicted block would silently
-# recompute with a fresh range-boundary sample and fresh
-# spark_partition_id assignment, so the collected prefix-offset map would
-# no longer match row placement — silently wrong global ranks.  A
-# localCheckpoint severs lineage, so a lost block fails LOUDLY instead.
-# release_rank_caches() drops the references after the consuming plan has
-# been fully executed (ContextCleaner reclaims the blocks once the RDD is
-# unreferenced).
-_CACHED: list[DataFrame] = []
-
 # the PRE-checkpoint plan of the most recent distributed_ntile call,
 # retained for plan introspection only: the checkpointed table's plan is a
 # lineage-severed LogicalRDD, so the key-construction Project (e.g. the
@@ -86,8 +73,17 @@ def distributed_ntile(
     )
     global LAST_PRECHECKPOINT
     LAST_PRECHECKPOINT = pre
+    # the prefix-count action and the returned plan both read this table.
+    # Eager localCheckpoint (not cache()) because correctness DEPENDS on
+    # both reads seeing the same partitioning: a cache-evicted block would
+    # silently recompute with a fresh range-boundary sample and fresh
+    # spark_partition_id assignment, so the collected prefix-offset map
+    # would no longer match row placement — silently wrong global ranks.
+    # A localCheckpoint severs lineage, so a lost block fails LOUDLY
+    # instead.  The returned frame is built on it, so it holds the
+    # checkpoint alive; ContextCleaner reclaims the blocks once the caller
+    # drops the result.
     ranged = pre.localCheckpoint(eager=True)
-    _CACHED.append(ranged)
     counts = {
         r["_pid"]: r["c"]
         for r in ranged.groupBy("_pid")
@@ -120,15 +116,3 @@ def distributed_ntile(
         .withColumn(bucket_name, bucket.cast("int"))
         .drop("_pid", "_lr", "_rank")
     )
-
-
-def release_rank_caches() -> None:
-    """Drop every range-partitioned table checkpointed by distributed_ntile.
-
-    Must run only after the returned plans have been fully executed: the
-    lineage is severed, so a released table cannot be recomputed (by
-    design — see _CACHED).  ``unpersist`` is a defensive no-op for
-    localCheckpointed data; the reference drop is what lets the
-    ContextCleaner reclaim the blocks."""
-    while _CACHED:
-        _CACHED.pop().unpersist(blocking=False)

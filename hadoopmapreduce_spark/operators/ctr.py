@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, work_dir
 from hadoopmapreduce_spark.registry import query
 
 
@@ -425,12 +425,10 @@ def scan_textkv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single huge part-file fans out instead of becoming one straggler);
     parsing is plain codegen regexp/cast on top of the (key, value)
     strings."""
-    import tempfile
-
     from hadoopmapreduce_spark.sources.textkv_source import register_textkv
 
     register_textkv(spark)
-    outdir = tempfile.mkdtemp(prefix="hmr_textkv_")
+    outdir = work_dir("textkv", sf_dir, fresh=True)
     sink_textkv(spark, sf_dir).write.mode("overwrite").text(outdir)
     raw = spark.read.format("textkv").load(outdir)
     return raw.select(
@@ -475,12 +473,10 @@ def sink_textkv_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each write task streams its partition to one staged file (no
     driver collect); commit is a metadata-only rename pass over one
     message per task."""
-    import tempfile
-
     from hadoopmapreduce_spark.sources.textkv_source import register_textkv
 
     register_textkv(spark)
-    outdir = tempfile.mkdtemp(prefix="hmr_textkv_w_")
+    outdir = work_dir("textkv_w", sf_dir, fresh=True)
     flagged = _flagged_views(spark, sf_dir)
     ctr = (
         flagged.withColumn("cohort", F.col("user_id") % 10)

@@ -21,7 +21,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve under
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table, spread_for_expansion
+from hadoopmapreduce_spark.catalog import load_spread, load_table
 from hadoopmapreduce_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -44,9 +44,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic canonical representative.  One shuffle on the 128-bit
     content hash (never on the text itself — shuffle bytes stay tiny no
     matter how long documents get)."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return (
         d.select(F.md5(F.col("text").cast("binary")).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
@@ -70,9 +68,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def exact_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup after canonicalization (lowercase, whitespace collapse) —
     catches trivially-reformatted copies that byte-exact hashing misses."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     return (
         d.select(F.md5(norm.cast("binary")).alias("norm_hash"), "doc_id")
@@ -118,9 +114,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than a per-index slice+concat lambda (which allocates a subarray
     per element) — ~2× cheaper in Spark's interpreted higher-order-function
     evaluator, same output strings."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     ts = F.split(F.col("text"), r"\s+")
     n = F.size(ts)
     first = F.slice(ts, 1, n - 2)
@@ -384,9 +378,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, long) — vastly cheaper to materialize than to recompute from
     text.  Semantic correctness is additionally pinned by unit tests on
     perturbed documents (tests/test_dedup_semantics.py)."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split(F.col("text"), r"\s+")).alias("tok")
     )
@@ -479,9 +471,7 @@ def exact_cosine_pairs(
     import numpy as np
     import pandas as pd
 
-    e = spread_for_expansion(
-        load_table(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings"
-    ).select(
+    e = load_spread(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
         (F.col("vec_id") % COSINE_BLOCKS).alias("blk"),
@@ -1217,9 +1207,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's duplicate Jaccard levels (≥0.9) is 1-2e-14, so the banded
     path equals the exact-Jaccard oracle.  Output is the per-status
     rollup (count + id range) — stable under re-partitioning."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     delta_ids = F.col("doc_id") % 5 == 0
     h = F.md5(F.col("text").cast("binary"))
     dh = d.filter(delta_ids).select("doc_id", h.alias("h"))
@@ -1338,9 +1326,7 @@ def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     All pure string/array codegen (parse_url + filter/array_sort/
     array_join) — one shuffle on the canonical key, same linear shape as
     exact_dedup."""
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     base = (F.col("doc_id") / 2).cast("long").cast("string")
     url = F.when(
         F.col("doc_id") % 2 == 0,
@@ -1428,9 +1414,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct IS the sort key, so no zipWithIndex/window over the
     vocabulary)."""
     t_num, t_den = 4, 5  # Jaccard threshold 0.8 as an exact rational
-    docs = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    docs = load_spread(spark, sf_dir, "documents")
     ts = F.split(F.col("text"), r"\s+")
     n_t = F.size(ts)
     sh = F.zip_with(
@@ -2016,9 +2000,7 @@ def _semantic_assignment_parts(spark: SparkSession, sf_dir: str):
     so per-cluster size stays ~TARGET_M — the SQL twin derives the same
     G/seed in `_SEMDEDUP_ASSIGN_CTES` with identical integer
     arithmetic."""
-    e = spread_for_expansion(
-        load_table(spark, sf_dir, "embeddings"), spark, sf_dir, "embeddings"
-    ).select(
+    e = load_spread(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
@@ -2375,7 +2357,9 @@ def dedup_semantic_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_lsh_eval recipe, VERDICT r13 ask #1) materializes the assignment
     # once instead of planning+executing the centroid/fold subtree per
     # consumer (plans/r14/dedup_semantic_multiprobe_before.txt: 32
-    # Exchanges / 8 scans)
+    # Exchanges / 8 scans).  Standalone at sf0.1 on local[4], alternating
+    # best-of-5: 2.84 s with it, 3.26 s without (16 jobs either way,
+    # executor CPU 0.76 s vs 1.07 s).
     probes = semantic_assignment_multiprobe(spark, sf_dir).localCheckpoint(
         eager=False
     )
@@ -2502,7 +2486,9 @@ def dedup_semantic_eval(
     # both from one stable argsort.  Before this change the assignment
     # subtree (centroid aggregation + scored-array fold) was planned and
     # executed once per branch — 82 Exchanges / 18 scans in one plan
-    # (plans/r14/dedup_semantic_eval_before.txt).
+    # (plans/r14/dedup_semantic_eval_before.txt).  Standalone at sf0.1 on
+    # local[4], alternating best-of-5: 5.58 s with the checkpoint, 6.38 s
+    # without (28 jobs either way, executor CPU 1.14 s vs 2.28 s).
     probes = semantic_assignment_multiprobe(spark, sf_dir)
     if audit_fraction < 1.0:
         probes = probes.filter(

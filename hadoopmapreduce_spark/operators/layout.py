@@ -761,8 +761,8 @@ def maintenance_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming_merge_upsert's CDC sink); retention policy keeps the last K
     and physically removes the rest — Delta's VACUUM / Iceberg's
     expire_snapshots, emulated on the same plain-parquet version layout
-    the merge emulation uses (sources/lakehouse.py documents the
-    env-blocked real connectors).
+    the streaming merge uses (the Delta/Iceberg jars are not in this
+    build).
 
     The audit row is NOT literals echoed back: ``versions_written`` and
     ``versions_retained`` are counted from the FILESYSTEM before and

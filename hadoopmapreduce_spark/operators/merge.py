@@ -4,7 +4,7 @@ The reference has no mutation surface at all (append-only text sinks,
 ``ClickThru.java:57,76``); MERGE is mandated by the lakehouse category of
 the build plan.  The Delta/Iceberg jars are not in this build, so the
 registered queries drive the parquet emulation in
-``sources.lakehouse.merge_upsert_parquet`` — semantics identical to
+:func:`merge_upsert_parquet` — semantics identical to
 ``MERGE WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT``, minus the
 transaction log (snapshot-swap instead).
 
@@ -16,15 +16,34 @@ oracle-checked — unlike round 1 where MERGE lived only in tests.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, work_dir
 from hadoopmapreduce_spark.registry import query
 
 NEW_KEY_OFFSET = 1_000_000  # inserted keys live above any fixture custkey
+
+
+def merge_upsert_parquet(
+    spark: SparkSession, target_path: str, updates: DataFrame, key: str
+) -> DataFrame:
+    """MERGE INTO emulation on plain parquet: matched target rows are
+    replaced by their update, unmatched updates are inserted, untouched rows
+    carry over — ``target ANTI JOIN updates ON key, UNION ALL updates``.
+
+    The merged snapshot is written to the sibling path ``<target>_v2`` and
+    read back (rewriting the path being scanned is not transactional on
+    plain parquet — the atomic pointer swap is exactly what Delta/Iceberg
+    add).  At scale the anti-join shuffles on the merge key like any
+    equi-join; with a bucketed target it is shuffle-free on the target
+    side."""
+    target = spark.read.parquet(target_path)
+    merged = target.join(updates, key, "left_anti").unionByName(updates)
+    new_path = target_path.rstrip("/") + "_v2"
+    merged.write.mode("overwrite").parquet(new_path)
+    return spark.read.parquet(new_path)
 
 
 def _customer_slim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,8 +79,6 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     under a fresh key.  Runs the REAL parquet path — target snapshot written
     to disk, merged via anti-join + union, new snapshot version written and
     read back — not just an in-memory DataFrame expression."""
-    from hadoopmapreduce_spark.sources.lakehouse import merge_upsert_parquet
-
     target = _customer_slim(spark, sf_dir)
     updates = target.filter(F.col("custkey") % 10 == 0).select(
         "custkey",
@@ -74,8 +91,7 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("acctbal"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="hmr_merge_")
-    target_path = os.path.join(tmp, "target")
+    target_path = os.path.join(work_dir("merge", sf_dir, fresh=True), "target")
     target.write.mode("overwrite").parquet(target_path)
     return merge_upsert_parquet(spark, target_path, updates, "custkey")
 

@@ -14,10 +14,10 @@ with CRC32 verification, zlib inflate, all five scanline filter
 reconstructions — grayscale subset), and VIDEO via ``synthesize_mp4``/
 ``parse_mp4_features`` (ISO-BMFF box-tree walk with strict size
 accounting — the metadata probe pipelines run WITHOUT frame decoding).
-Exact-integer features keep all three SQL-oracle-checkable.  What stays
-honestly env-stubbed: frame/pixel decode for compressed codecs (JPEG,
-H.264 — PIL/libvips/ffmpeg absent; see ``decode_image_stub``).  Also
-real and tested: the schema convention, the binary round-trip, the
+Exact-integer features keep all three SQL-oracle-checkable.  Not
+implemented: the float stages of pixel decode for compressed codecs
+(JPEG IDCT and color conversion, H.264 — PIL/libvips/ffmpeg absent).
+Also real and tested: the schema convention, the binary round-trip, the
 ``mapInPandas`` batch plumbing (Arrow-chunked iterator, metadata-derived
 features), and the frame-sampling explode.
 """
@@ -31,29 +31,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table, spread_for_expansion
+from hadoopmapreduce_spark.catalog import load_spread, load_table
 from hadoopmapreduce_spark.registry import query
 
 _KINDS = ("image", "audio", "video")
-
-
-def decode_image_stub(payload: bytes) -> None:
-    """Placeholder for a real image decode (PIL/libvips not in container).
-
-    At deployment this becomes `PIL.Image.open(io.BytesIO(payload))` inside
-    the same mapInPandas batch loop used by mm_decode_features — the Spark
-    plumbing does not change, only this function body.
-
-    Scope note (narrowed round 13): the gate now covers only the FLOAT
-    stages — IDCT and color conversion.  The entropy layers are decoded
-    for real in-repo: GIF LZW, BMP RLE8, and baseline-JPEG Huffman
-    (``decode_jpeg_huffman``: canonical tables from DHT, DC EXTEND, AC
-    run/size + ZRL + EOB, byte-unstuffing, DQT dequantization).
-    """
-    raise NotImplementedError(
-        "real image decoding requires PIL/libvips; not available in this "
-        "environment — mm_decode_features uses a deterministic fake decoder"
-    )
 
 
 WAV_FRAMERATE = 8000
@@ -152,9 +133,7 @@ def audio_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("payload", _synth(F.col("n_frames_spec"), F.col("amp_spec")))
 
 
-# DuckDB twin of audio_decode_features, validated by test now and ready for
-# the round-7 @query registration (kept unregistered this round to hold the
-# adjudication-backlog freeze — VERDICT r5 ask #1).
+# DuckDB twin of audio_decode_features (its registered oracle below).
 AUDIO_DECODE_ORACLE_SQL = f"""
     SELECT doc_id,
            1 AS n_channels,
@@ -1088,9 +1067,7 @@ def deflate_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id", (F.col("doc_id") % 256).cast("int").alias("s_spec")
     ).withColumn("payload", _synth(F.col("s_spec")))
@@ -1402,9 +1379,7 @@ def image_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     assets = d.select(
         "doc_id",
         (F.col("doc_id") % 3 + 2).cast("int").alias("wb_spec"),
@@ -1669,9 +1644,7 @@ def archive_gzip_member_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     assets = d.select(
         "doc_id",
         (F.col("doc_id") % 256).cast("int").alias("s_spec"),
@@ -2214,9 +2187,7 @@ def deflate_dynamic_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id", (F.col("doc_id") % 256).cast("int").alias("s_spec")
     ).withColumn("payload", _synth(F.col("s_spec")))
@@ -2308,7 +2279,7 @@ _DECODE_SCHEMA = (
 def _fake_decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Deterministic fake decoder over Arrow batches: derives pseudo
     width/height/frame-count from payload length.  Swap the body for a real
-    codec (see decode_image_stub) without touching the Spark plan."""
+    codec (e.g. ``PIL.Image.open``) without touching the Spark plan."""
     for pdf in it:
         n_bytes = pdf["payload"].map(len).astype("int32")
         width = (n_bytes % 64 + 16).astype("int32")
@@ -2795,8 +2766,8 @@ def mm_image_resize_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- real JPEG structural probe (marker segments + byte-stuffing) ---------
 #
-# Pixel decode for JPEG needs an entropy codec (env-stubbed, see
-# ``decode_image_stub``), but the MARKER layer — what a pipeline reads to
+# Pixel decode for JPEG needs an entropy codec (see
+# ``decode_jpeg_huffman``) and an IDCT, but the MARKER layer — what a pipeline reads to
 # probe dimensions/components without decoding — is a pure segment format
 # (ITU-T T.81 B.1): 0xFF-prefixed markers with big-endian lengths, and an
 # entropy-coded scan in which literal 0xFF data bytes are STUFFED as
@@ -2927,9 +2898,7 @@ def jpeg_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         (F.length(F.encode(F.col("text"), "utf-8")) % 24 + 8).cast("int").alias("w_spec"),
@@ -2974,7 +2943,7 @@ def image_jpeg_probe_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy-coded scan walked with REAL byte-unstuffing (0xFF 0x00 pairs;
     the synthesis law guarantees some documents cross 0xFF, so the
     unstuff path runs, and n_stuffed is oracle-checked per document).
-    Entropy DECODE stays env-gated (``decode_image_stub``) — this is the
+    Entropy decode lives in ``decode_jpeg_huffman`` — this is the
     metadata layer a 100 TB pipeline actually reads.
 
     Scale: shuffle-free mapInPandas over Arrow batches, payload pruned to
@@ -3381,9 +3350,7 @@ def jpeg_baseline_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         (F.col("doc_id") % 3 + 1).cast("int").alias("wb_spec"),
@@ -3410,8 +3377,8 @@ def image_jpeg_huffman_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dequantizes against the stream's DQT at each zigzag index.  It stops
     before the IDCT — coefficients, not pixels — so every output column
     is an exact integer and the oracle is the closed-form law, never a
-    float DCT (the GIF/BMP boundary discipline; the env-gate note in
-    ``decode_image_stub`` now covers only IDCT + color conversion).
+    float DCT (the GIF/BMP boundary discipline; IDCT + color conversion
+    are not implemented).
 
     The checksums are chosen so each decode stage is load-bearing:
     ``dc_final``/``dc_poschk`` pin the running DC predictor (a single
@@ -4137,9 +4104,7 @@ def gif_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         (F.length(F.encode(F.col("text"), "utf-8")) % GIF_W_MOD + 4)
@@ -4244,9 +4209,7 @@ def gif_interlaced_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # blob synth + decode are per-row expansion work: spread the
     # single-split documents scan (no-op at >= cores input splits)
-    d = spread_for_expansion(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir, "documents"
-    )
+    d = load_spread(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         (F.length(F.encode(F.col("text"), "utf-8")) % GIF_W_MOD + 4)

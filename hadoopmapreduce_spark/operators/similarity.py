@@ -1204,10 +1204,7 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _pq_codebook(spark, sf_dir)
     enc_long = _pq_encode_long(n, cb)
     q = _pq_queries(n)
-    # the per-query ADC lookup table is bounded model state
-    # (|Q| × PQ_M × |codewords| rows); materializing it per invocation
-    # keeps the codebook build out of the scoring mega-plan
-    lut = _pq_lut(q, cb).localCheckpoint(eager=False)
+    lut = _pq_lut(q, cb)
 
     # ONE centroid aggregation feeds both sides: the corpus cell
     # multi-assignment and the query probe ranking share the same cent1
@@ -1226,15 +1223,7 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         if g == 1
         else _topn_assign_pandas(e2, cent1, nprobe=IVFADC_MASSIGN)
     )
-    # cell-assignment and probe tables are localCheckpoint-ed per
-    # invocation (VERDICT r13 ask #1, the ann_lsh_eval recipe): this is
-    # what a real IVF index build materializes, and it stops the
-    # 40-centroid scored-array fold from being re-planned and re-executed
-    # inside every consumer of the mega-plan
-    # (plans/r14/ann_ivfadc_topk_before.txt: 58 Exchanges / 18 scans)
-    cells = massign.select(
-        "vec_id", F.col("cluster").alias("cell")
-    ).localCheckpoint(eager=False)
+    cells = massign.select("vec_id", F.col("cluster").alias("cell"))
     # query probe set: top-NPROBE cells by the SAME scored array the
     # assignment folds over, ranked (cos DESC, cell ASC) like the twin
     qs = (
@@ -1256,7 +1245,6 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qs.withColumn("crk", F.row_number().over(wcell))
         .filter(F.col("crk") <= IVFADC_NPROBE)
         .select("query_id", "cell")
-        .localCheckpoint(eager=False)  # |Q|·NPROBE rows of model state
     )
     cand = (
         F.broadcast(probed)

@@ -445,7 +445,7 @@ def streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGED into a persistent per-user snapshot (existing users accumulate,
     new users insert) via ``foreachBatch``, with every merge landing as a
     new versioned snapshot (the plain-parquet stand-in for a Delta/Iceberg
-    transactional commit — see sources/lakehouse.py).
+    transactional commit).
 
     The merge is the algebraic-state fold from ``incremental_agg_merge``
     lifted into the streaming loop: (count, exact decimal sum) states
@@ -854,110 +854,6 @@ def streaming_dim_refresh_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").cast("decimal(28,6)").cast("double").alias("total_value"),
         )
     )
-
-
-# --------------------------------------------------------------------------
-# transformWithState — the Spark-4 successor to applyInPandasWithState
-# --------------------------------------------------------------------------
-#
-# ENV-BLOCKED (probed 2026-08-14, honest stub like sources/lakehouse.py):
-# ``transformWithStateInPandas`` spins a dedicated streaming Python driver
-# worker that imports ``google.protobuf`` for its state-server protocol;
-# this image's protobuf install is broken ("cannot import name 'descriptor'
-# from 'google.protobuf'"), so the worker exits -2 before the processor
-# runs (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).  RocksDB state
-# store (which TWS requires) IS available — only the protobuf dependency
-# blocks.  The full production call shape is kept below and exercised by
-# tests/test_stateful_streaming.py up to the documented env error; the
-# registered stateful query remains ``streaming_stateful_user_totals``
-# (applyInPandasWithState — the API this one succeeds).
-
-
-TWS_STATE_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def streaming_tws_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user purchase totals via ``transformWithStateInPandas`` — the
-    Spark-4 arbitrary-state API succeeding ``applyInPandasWithState``: a
-    ``StatefulProcessor`` owning a typed ``ValueState`` of
-    (count, spend_micros), folded per batch in order-independent integer
-    micros.  NOT registered as a query: the streaming Python driver worker
-    this API requires cannot initialize in this image (broken
-    google.protobuf — see module comment), so the call raises the
-    underlying STREAM_FAILED today; the code path is the real one and runs
-    unmodified once protobuf is importable."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_purchases", LongType()),
-            StructField("spend_micros", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("micros", LongType())]
-    )
-
-    class SpendProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-            n, micros = (
-                tuple(self._state.get()) if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                micros += int(pdf["micros"].sum())
-            self._state.update((n, micros))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_purchases": [n],
-                    "spend_micros": [micros],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", TWS_STATE_PROVIDER)
-    try:
-        src = (
-            _events_stream(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                "user_id",
-                (F.col("value").cast("decimal(18,6)") * 1_000_000)
-                .cast("long")
-                .alias("micros"),
-            )
-        )
-        totals = src.groupBy("user_id").transformWithStateInPandas(
-            SpendProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        emitted = _run_stream_to_parquet(
-            spark, totals, "tws_user_spend", output_mode="update", sf_dir=sf_dir
-        )
-        return emitted.groupBy("user_id").agg(
-            F.max("n_purchases").alias("n_purchases"),
-            F.max("spend_micros").alias("spend_micros"),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 @query(

@@ -14,6 +14,16 @@ def _docs(spark, rows):
     )
 
 
+def _feed(monkeypatch, docs, module="dedup"):
+    """Serve ``docs`` from both loaders an operator module reads its
+    documents through."""
+    for loader in ("load_table", "load_spread"):
+        monkeypatch.setattr(
+            f"hadoopmapreduce_spark.operators.{module}.{loader}",
+            lambda spark_, sf_dir, name: docs,
+        )
+
+
 BASE = (
     "spark query engine scans the table and joins the rows with hash "
     "partitioned keys before the final aggregate stage emits results"
@@ -29,10 +39,7 @@ def test_exact_dedup_counts(spark, tmp_path, monkeypatch):
     import hadoopmapreduce_spark.operators.dedup as dd
 
     docs = _docs(spark, [BASE, BASE, FAR])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     out = {r["canonical_doc_id"]: r["n_copies"] for r in dd.exact_dedup(spark, "x").collect()}
     assert out == {0: 2, 2: 1}
 
@@ -41,10 +48,7 @@ def test_minhash_finds_near_dup(spark, monkeypatch):
     import hadoopmapreduce_spark.operators.dedup as dd
 
     docs = _docs(spark, [BASE, NEAR, FAR])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     pairs = {(r["doc_a"], r["doc_b"]) for r in dd.minhash_lsh_dedup(spark, "x").collect()}
     assert (0, 1) in pairs
     assert all(2 not in p for p in pairs)
@@ -54,10 +58,7 @@ def test_minhash_matches_exact_jaccard(spark, monkeypatch):
     import hadoopmapreduce_spark.operators.dedup as dd
 
     docs = _docs(spark, [BASE, NEAR, FAR, BASE + " extra tail tokens appended"])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     exact = {
         (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
         for r in dd.ngram_jaccard_pairs(spark, "x").collect()
@@ -73,10 +74,7 @@ def test_simhash_near_vs_far(spark, monkeypatch):
     import hadoopmapreduce_spark.operators.dedup as dd
 
     docs = _docs(spark, [BASE, NEAR, FAR])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in dd.simhash_dedup(spark, "x").collect()}
     assert (0, 1) in pairs  # one-token edit stays within hamming 3
     assert all(2 not in p for p in pairs)  # unrelated doc does not pair
@@ -167,10 +165,7 @@ def test_substring_spans_cross_doc_run(spark, monkeypatch):
     d0 = _hex_chain("p0", 40) + shared + _hex_chain("s0", 40)
     d1 = _hex_chain("p1", 55) + shared + _hex_chain("s1", 25)
     docs = _docs(spark, [d0, d1, _hex_chain("far", 120)])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     rows = {r["doc_id"]: r for r in dd.dedup_substring_spans(spark, "x").collect()}
     assert set(rows) == {0, 1}
     for i in (0, 1):
@@ -186,10 +181,7 @@ def test_substring_spans_within_doc_repeat(spark, monkeypatch):
     block = _hex_chain("block", 30)
     doc = _hex_chain("a", 35) + block + _hex_chain("gap", 45) + block + _hex_chain("z", 35)
     docs = _docs(spark, [doc, _hex_chain("other", 100)])
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.dedup.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs)
     rows = {r["doc_id"]: r for r in dd.dedup_substring_spans(spark, "x").collect()}
     assert rows[0]["dup_spans"] == 2
     assert rows[0]["dup_chars"] == 60
@@ -213,10 +205,7 @@ def test_cdc_chunks_survive_insertion(spark, monkeypatch):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    monkeypatch.setattr(
-        "hadoopmapreduce_spark.operators.multimodal.load_table",
-        lambda spark_, sf_dir, name: docs,
-    )
+    _feed(monkeypatch, docs, "multimodal")
     rows = mm.mm_cdc_chunking(spark, "x").collect()
     h0 = {r["chunk_hash"] for r in rows if r["doc_id"] == 0}
     h1 = {r["chunk_hash"] for r in rows if r["doc_id"] == 1}

@@ -1,9 +1,13 @@
 """MERGE INTO / SCD2 emulation on plain parquet (no Delta in this build):
 upsert = target anti-join updates (keep untouched rows) + union updates;
 SCD2 = close out changed rows with an end date + append new versions.
-This is the batch-parquet fallback documented in sources/lakehouse.py."""
+This is the batch-parquet path of operators/merge.py:merge_upsert_parquet."""
 
 from __future__ import annotations
+
+import glob
+import os
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -96,3 +100,17 @@ def test_incremental_state_merge_equals_direct_recompute(spark, tmp_path):
         for r in incremental_agg_merge(spark, str(tmp_path)).collect()
     }
     assert got == {"A": (2, 40.0, 20.0), "B": (1, 7.5, 7.5)}
+
+
+def test_merge_upsert_leaves_no_temp_dir_per_call(spark, sf_dir, monkeypatch, tmp_path):
+    """Repeated ``merge_upsert`` calls write into one work_dir, cleared per
+    call, instead of a fresh temp dir each time."""
+    from hadoopmapreduce_spark.operators.merge import merge_upsert
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    pattern = os.path.join(tempfile.gettempdir(), "hmr_merge_*")
+    before = set(glob.glob(pattern))
+    counts = [merge_upsert(spark, sf_dir).count() for _ in range(2)]
+    assert counts[0] == counts[1] > 0
+    assert set(glob.glob(pattern)) == before
+    assert len(glob.glob(str(tmp_path / "hmr_merge_*"))) == 1

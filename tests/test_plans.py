@@ -285,7 +285,6 @@ def test_zorder_key_is_codegen(spark, sf_dir):
     assert pre is not None, "layout_zorder_stats did not call distributed_ntile"
     assert_contains(pre, "shiftleft")
     assert_not_contains(pre, "BatchEvalPython", "ArrowEvalPython")
-    ranks.release_rank_caches()
 
 
 def test_semdedup_assignment_is_shuffle_free(spark, sf_dir):

@@ -273,7 +273,6 @@ def test_distributed_ntile_property(spark, n, k, mod):
         (r["val"], r["tid"]): r["bucket"]
         for r in ranks.distributed_ntile(df, k, ["val", "tid"]).collect()
     }
-    ranks.release_rank_caches()
     assert got == expect, (n, k, mod)
 
 

@@ -75,16 +75,6 @@ def test_spread_fires_on_one_row_group_despite_byte_splits(spark):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
-def test_spread_kill_switch(spark, monkeypatch):
-    """SPARK_GRAFT_NO_SPREAD=1 (the measurement A/B knob) disables the
-    repartition unconditionally."""
-    from hadoopmapreduce_spark.catalog import load_table, spread_for_expansion
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-    df = load_table(spark, SF_SMALL, "documents")
-    assert spread_for_expansion(df, spark, SF_SMALL, "documents") is df
-
-
 def test_spread_missing_path_is_noop(spark):
     """Unknown table file → size 0 → identity (defensive: never guess)."""
     from hadoopmapreduce_spark.catalog import load_table, spread_for_expansion

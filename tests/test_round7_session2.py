@@ -220,13 +220,6 @@ def test_distributed_ntile_matches_window_ntile(spark):
             for r in distributed_ntile(df, k, ["val", "tid"]).collect()
         }
         assert got == expect, (n, k)
-    # the helper caches each range-partitioned table; the release hook
-    # must drain them (same hygiene contract as graph.release_graph_caches)
-    from hadoopmapreduce_spark.functions import ranks
-
-    assert len(ranks._CACHED) >= len(cases)
-    ranks.release_rank_caches()
-    assert ranks._CACHED == []
 
 
 def test_perf_weak_ntile_queries_have_no_global_window(spark, sf_dir):
@@ -241,22 +234,17 @@ def test_perf_weak_ntile_queries_have_no_global_window(spark, sf_dir):
     from hadoopmapreduce_spark.operators.layout import layout_zorder_stats
     from hadoopmapreduce_spark.plans import physical_plan
 
-    from hadoopmapreduce_spark.functions import ranks
-
-    try:
-        for fn in (agg_equidepth_histogram, layout_zorder_stats):
-            plan = physical_plan(fn(spark, sf_dir))
-            assert "Exchange SinglePartition" not in plan, fn.__name__
-            # since the ADVICE-r7 hardening the range exchange runs inside
-            # distributed_ntile's EAGER localCheckpoint (lineage severed so
-            # eviction can't silently re-sample); the returned plan scans
-            # the checkpointed RDD instead of re-shuffling
-            assert (
-                "rangepartitioning" in plan.lower()
-                or "existingrdd" in plan.lower()
-            ), (fn.__name__, plan)
-    finally:
-        ranks.release_rank_caches()
+    for fn in (agg_equidepth_histogram, layout_zorder_stats):
+        plan = physical_plan(fn(spark, sf_dir))
+        assert "Exchange SinglePartition" not in plan, fn.__name__
+        # since the ADVICE-r7 hardening the range exchange runs inside
+        # distributed_ntile's EAGER localCheckpoint (lineage severed so
+        # eviction can't silently re-sample); the returned plan scans
+        # the checkpointed RDD instead of re-shuffling
+        assert (
+            "rangepartitioning" in plan.lower()
+            or "existingrdd" in plan.lower()
+        ), (fn.__name__, plan)
 
 
 def test_lm_surprise_invariants(spark, sf_dir):

@@ -111,3 +111,24 @@ def test_register_views_registers_only_named(spark, sf_dir):
 
     register_views(spark, sf_dir)
     assert _fixture_views(spark) == set(TABLES)
+
+
+def test_env_options_are_the_five_host_settings():
+    """The package reads exactly five ``SPARK_GRAFT_*`` environment
+    options, each a fact about the host or a test hook; everything else
+    is a constant in the code."""
+    import re
+
+    found: set[str] = set()
+    for root, _dirs, files in os.walk(os.path.join(REPO_ROOT, "hadoopmapreduce_spark")):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name), encoding="utf-8") as fh:
+                    found.update(re.findall(r"SPARK_GRAFT_([A-Z_]+)", fh.read()))
+    assert found == {
+        "CPUS",
+        "DRIVER_MEM",
+        "WAREHOUSE",
+        "SCRATCH",
+        "STREAM_MERGE_FILES_PER_TRIGGER",
+    }

@@ -66,26 +66,6 @@ def test_textkv_sink_shape(spark, sf_dir, tmp_path):
     assert lines == ["[u1, a1]\t5000", "[u2, a1]\t0"]
 
 
-def test_lakehouse_stubs_raise_cleanly(spark):
-    import pytest as _pytest
-
-    from hadoopmapreduce_spark.sources import lakehouse
-
-    with _pytest.raises(NotImplementedError, match="Delta Lake"):
-        lakehouse.read_delta(spark, "/tmp/nonexistent")
-    with _pytest.raises(NotImplementedError, match="Iceberg"):
-        lakehouse.read_iceberg(spark, "cat.db.tbl")
-
-
-def test_decode_stub_raises_cleanly():
-    import pytest as _pytest
-
-    from hadoopmapreduce_spark.operators.multimodal import decode_image_stub
-
-    with _pytest.raises(NotImplementedError, match="PIL"):
-        decode_image_stub(b"\x89PNG fake bytes")
-
-
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
     nation = load_table(spark, sf_dir, "nation")
     out = str(tmp_path / "nation_orc")

@@ -71,30 +71,3 @@ def test_apply_in_pandas_with_state(spark, tmp_path):
     for r in rows:
         latest[r["user_id"]] = max(latest.get(r["user_id"], 0), r["n_events"])
     assert latest == {1: 3, 2: 1}
-
-
-def test_transform_with_state_env_gate(spark, sf_dir):
-    """transformWithStateInPandas is env-blocked in this image (its
-    streaming Python driver worker needs google.protobuf, which cannot
-    import here).  Exercise the full call shape up to that boundary: if the
-    env ever gains protobuf this test flips to asserting real results —
-    which is the signal to register the query."""
-    import pytest
-
-    from hadoopmapreduce_spark.streaming.windowed import streaming_tws_user_spend
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-
-        with pytest.raises(StreamingQueryException, match="TransformWithState"):
-            streaming_tws_user_spend(spark, sf_dir)
-    else:
-        rows = streaming_tws_user_spend(spark, sf_dir).collect()
-        assert rows and all(r["n_purchases"] > 0 for r in rows)
