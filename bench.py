@@ -9,8 +9,8 @@ never sees the rows; we still force full materialization of the result).
 Outlier self-adjudication (VERDICT r6 ask #4): any query whose in-suite
 best-of-N exceeds the PRIOR run's sidecar number by >1.3x is re-measured
 standalone — best-of-4 in a FRESH subprocess (own JVM, no suite cache
-pressure) — and both numbers land in the artifact, so in-suite noise in the
-shared-cache graph family is adjudicated by data, not NOTES.md prose.
+pressure) — and both numbers land in the artifact, so in-suite noise is
+adjudicated by data, not NOTES.md prose.
 ``python bench.py --standalone <query>`` is that subprocess entry point.
 """
 
@@ -25,26 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoopmapreduce_spark import registry  # noqa: E402
-from hadoopmapreduce_spark.operators import graph  # noqa: E402
 from hadoopmapreduce_spark.session import get_spark  # noqa: E402
-
-
-def _drain_caches() -> None:
-    """Release the graph cache registry (family boundaries).
-
-    graph accumulates resident tables per call (its cached oriented edge
-    tables); left undrained across the 300-query suite they build storage
-    pressure that evicts the hot fixture mid-bench — the exact failure
-    mode the release hook exists to prevent (graph.py docstring).  Graph
-    caches go through ``cache()``, which Spark's CacheManager dedupes by
-    logical plan, so the graph cohort legitimately shares ONE resident
-    edge table across queries — drained per FAMILY (the suite runs
-    queries sorted by name, so families are contiguous), which is how
-    every prior round's committed numbers were measured.  Safe because
-    each timed query has been fully materialized by the noop write before
-    any drain runs."""
-    graph.release_graph_caches()
-
 
 SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
 
@@ -131,10 +112,6 @@ def run_standalone(name: str) -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-    # drain AFTER the best-of loop: in-suite runs of one query share their
-    # caches, so the standalone re-measurement must too, or the outlier
-    # adjudicator compares a colder configuration against the suite
-    _drain_caches()
     print(json.dumps({"query": name, "best": round(best, 3)}))
 
 
@@ -233,15 +210,11 @@ def main() -> None:
 
     cold: dict[str, float] = {}
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    family = None
     # canary baseline sample opens segment 0 (post-warm-up, pre-suite)
     canary_series: list[list[float]] = [[0, round(_run_canary(spark, sf_dir), 3)]]
     segment_walls: list[float] = [0.0]
     n_done = 0
     for name in sorted(registry.QUERIES):
-        if family is not None and name.split("_")[0] != family:
-            _drain_caches()  # family boundary (names are sorted)
-        family = name.split("_")[0]
         fn = registry.QUERIES[name]
         best = None
         for i in range(runs):  # best-of-N: first run pays JIT/codegen warm-up
@@ -263,7 +236,6 @@ def main() -> None:
         if n_done % CANARY_EVERY == 0:
             canary_series.append([n_done, round(_run_canary(spark, sf_dir), 3)])
             segment_walls.append(0.0)
-    _drain_caches()
     # closing sample bounds the last (possibly short) segment
     canary_series.append([n_done, round(_run_canary(spark, sf_dir), 3)])
 

@@ -25,6 +25,9 @@ _SCHEMA_CACHE: dict[tuple[str, str, int, int], StructType] = {}
 # session's entry dies with it, and id-reuse can't false-positive)
 _CONFIGURED_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
+# The directory that holds the ``hadoopmapreduce_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region",
     "nation",
@@ -47,6 +50,12 @@ def _ensure_session_confs(spark: SparkSession) -> None:
       shifts ``to_date``/``date_trunc`` results.
     * ``nanosAsLong`` — Spark 4 refuses INT64 TIMESTAMP(NANOS) parquet
       columns (``events.ts``); read as long and convert explicitly.
+    * the package's parent directory on the Python workers' ``PYTHONPATH``
+      — a worker unpickles UDFs that reference ``hadoopmapreduce_spark``;
+      a session started outside the checkout (a plain one, or ours) fails
+      with ``ModuleNotFoundError`` on the first pandas UDF without it.
+      UDFs take the context's environment when they are first applied,
+      so setting it here, before any query is built, covers all of them.
     """
     # one py4j round trip per conf.set; skip once this session is known
     # to be configured (queries never unset these)
@@ -54,6 +63,10 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "").split(os.pathsep)
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *filter(None, paths)])
     _CONFIGURED_SESSIONS.add(spark)
 
 

@@ -54,12 +54,11 @@ _EDGES_SQL = """
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (u < v) from lineitem.
 
-    Cached here — not in each consumer — so all three graph queries
-    (triangles, PageRank, BFS) share ONE in-memory edge table per fixture:
-    Spark's CacheManager keys entries by canonicalized plan, so the identical
-    plan built by each query resolves to the same ``InMemoryRelation`` instead
-    of re-running the distinct + self-join per query (the edge build dominated
-    the family's cold cost when derived three times)."""
+    Checkpointed here, by the function that builds the table, so every
+    branch of the calling query (degrees, joins, counts) reads one
+    materialization instead of re-running the distinct + self-join.  The
+    checkpoint belongs to the calling query: Spark's ContextCleaner frees
+    it once the query's frames are dropped."""
     items = (
         load_spread(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -67,7 +66,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = items.alias("a")
     b = items.alias("b")
-    edges = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -75,42 +74,19 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
-        .cache()
+        .localCheckpoint()
     )
-    _CACHED.append(edges)
-    return edges
 
 
 def directed_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both directions of the undirected edge set, cached once and shared by
-    the iterative queries (PageRank joins it every iteration, BFS every
-    round)."""
+    """Both directions of the undirected edge set, checkpointed once for
+    the iterative queries (BFS joins it every round)."""
     edges = copurchase_edges(spark, sf_dir)
-    directed = edges.select(
+    return edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
-    _CACHED.append(directed)
-    return directed
-
-
-# Cached graph DataFrames, in creation order.  Plan-keyed caching means this
-# holds duplicates of a handful of distinct entries; release_graph_caches()
-# exists so long sessions that sweep many fixtures (bench best-of-N, pytest)
-# can drop dead fixtures' entries instead of waiting for storage-memory LRU,
-# which under pressure can evict the HOT fixture mid-bench.
-_CACHED: list[DataFrame] = []
-
-
-def release_graph_caches() -> None:
-    """Unpersist every graph cache created so far (non-blocking — safe only
-    once the caller has materialized any results it still needs).  Also
-    drops the Louvain per-fixture state so its checkpointed label tables
-    can be GC-reclaimed with the rest of the family's residents."""
-    while _CACHED:
-        _CACHED.pop().unpersist(blocking=False)
-    _LOUVAIN_STATE.clear()
+    ).localCheckpoint()
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -124,20 +100,10 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     Returns a single row (n_nodes, n_edges, n_triangles).
 
     ``edges`` and ``oriented`` each feed multiple branches of the DAG (deg,
-    wedge sides, closing side, the counts) — without materialization Spark
+    wedge sides, closing side, the counts); without materialization Spark
     recomputes the upstream distinct/self-join once per branch, which
-    dominated the wall time.  ``cache()`` (not ``localCheckpoint``: the
-    RDD-backed checkpoint erases Catalyst stats, which demoted the small
-    degree side from broadcast to sort-merge and made everything slower)
-    computes each once and keeps sizeInBytes for the planner.
-
-    Cache lifetime: entries are keyed by canonicalized plan, so repeated
-    invocations over the same fixture REUSE one entry rather than piling
-    up copies; they are reclaimed by storage-memory LRU or explicitly via
-    :func:`release_graph_caches` (eager unpersist here would race the
-    caller's lazy materialization of the returned DataFrame)."""
-    edges = edges.cache()
-    _CACHED.append(edges)
+    dominated the wall time.  ``edges`` arrives materialized by its builder
+    (:func:`copurchase_edges`); ``oriented`` is checkpointed here."""
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -156,9 +122,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .cache()
+        .localCheckpoint()
     )
-    _CACHED.append(oriented)
     # Adjacency-intersection count: for oriented edge (a,b), every common
     # out-neighbor closes one triangle, and the orientation (acyclic total
     # order) finds each triangle from exactly one edge.  The per-node
@@ -175,8 +140,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # broadcast territory (Spark's hard cap is 8 GB) — so we hint it
     # explicitly; beyond that bound we fall through to the shuffled join,
     # which is the correct plan when the adjacency no longer fits.  The
-    # count is free: `edges` is cached and already materialized by the
-    # degree aggregation.
+    # count is cheap: `edges` is a checkpoint.
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
@@ -229,10 +193,11 @@ def pagerank_int(edges: DataFrame, iters: int = 5) -> DataFrame:
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    # materialize once: the edge+degree table feeds every iteration, and
-    # without it each iteration re-derives the whole co-purchase pipeline
-    with_deg = directed.join(deg, "src").cache()
-    _CACHED.append(with_deg)
+    # not materialized: ``edges`` arrives checkpointed by its builder, and
+    # the iterations' identical degree-join exchanges are reused, so a second
+    # checkpoint here only adds a job (sf0.1, local[4]: 21.7 s with one,
+    # 18.2 s without)
+    with_deg = directed.join(deg, "src")
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(_PR_INIT).cast("long").alias("rank")
     )
@@ -366,7 +331,7 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each round is relax-then-min: union the previous labels with
     edge-propagated ``dist+1`` candidates and take the per-node minimum —
     one shuffle per round, keyed on the node id like PageRank's, over the
-    same cached directed-edge table.  Distances are small integers, so
+    same checkpointed directed-edge table.  Distances are small integers, so
     every engine agrees exactly; the frontier count per distance is the
     hash-checked output (node-level labels would be 20k rows of the same
     information)."""
@@ -438,7 +403,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a heavy tail here is what motivates the degree orientation in
     :func:`triangle_count` and salting elsewhere).
 
-    Two hash aggregates over the shared cached directed-edge table — the
+    Two hash aggregates over the checkpointed directed-edge table — the
     node-keyed one reuses the partitioning every other graph query
     shuffles on, and the histogram is at most max-degree rows."""
     directed = directed_copurchase_edges(spark, sf_dir)
@@ -800,7 +765,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating ppm division, same discipline as ts_linear_trend and
     integer PageRank).
 
-    Reuses the session-cached shared edge table; degrees are one
+    Reads the checkpointed edge table; degrees are one
     wordcount over edge endpoints, the pair table two hash joins on node
     id, moments one scalar aggregate — linear, broadcast-free."""
     e = copurchase_edges(spark, sf_dir)
@@ -905,8 +870,8 @@ def graph_neighbor_jaccard_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     |N(u)∪N(v)| = deg_u + deg_v − common).  The "substitute candidate"
     generator behind "customers who bought these also bought...".
 
-    Scale shape: wedge enumeration is the same self-join on the shared
-    cached directed-edge table that triangle counting uses, with the three
+    Scale shape: wedge enumeration is the same self-join on the
+    checkpointed directed-edge table that triangle counting uses, with the three
     guards production systems always add — the candidate scope (brand)
     pushed into BOTH wedge-join inputs BEFORE the quadratic fan-out (see
     the scope comment above: ~625× fewer wedge rows), hub centers above
@@ -920,14 +885,13 @@ def graph_neighbor_jaccard_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     directed = directed_copurchase_edges(spark, sf_dir)
     # node-count-sized and referenced three times (cap filter + two scoring
-    # joins) — cache it so the aggregate over the edge table runs once per
-    # fixture, not once per reference (plan-keyed, shared across calls)
+    # joins): checkpoint it so the aggregate over the edge table runs once,
+    # not once per reference
     deg = (
         directed.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("deg"))
-        .cache()
+        .localCheckpoint()
     )
-    _CACHED.append(deg)
     part = load_table(spark, sf_dir, "part")
     bparts = (
         part.join(
@@ -1038,7 +1002,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes the walk never reached in PPR_ITERS rounds (identical semantics
     both engines — unreached = no path ≤ iters from any seed).
 
-    Scale: one cached edge+degree table feeds every iteration (linear
+    Scale: one checkpointed edge table feeds every iteration (linear
     lineage — ranks referenced once per round, the BFS lesson); the seed
     flag is a broadcast left join.  Cost per round = one join + one
     aggregate on the edge partitioning, independent of iteration count."""
@@ -1047,8 +1011,7 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-    with_deg = directed.join(deg, "src").cache()
-    _CACHED.append(with_deg)
+    with_deg = directed.join(deg, "src")  # not materialized: see pagerank_int
     # seed set is model-state-sized (~1/25 of nodes); materialize it ONCE —
     # without the eager checkpoint the part-scan + degree-agg lineage is
     # re-executed inside every iteration's broadcast
@@ -1136,7 +1099,7 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Overflow: 4·m·e_c ≤ 4m² — int64 safe to m ≈ 1.5e9 edges; document
     larger graphs through DECIMAL(38,0).  Shapes: two broadcast joins
-    label the (cached, shared) edge table with part brands, then two
+    label the checkpointed edge table with part brands, then two
     brand-keyed aggregates — linear in edges, the partition table is
     dimension-sized."""
     edges = copurchase_edges(spark, sf_dir)
@@ -1235,7 +1198,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence — the sentence a skip-gram embedding trains on.
 
     Shapes: the ranked adjacency (row_number + count per src — one
-    node-keyed window over the shared cached edge table) materializes
+    node-keyed window over the checkpointed edge table) materializes
     ONCE via eager checkpoint and serves all {WALK_STEPS} hop joins; walk
     state is seed-set-sized and referenced once per hop (linear lineage,
     the PageRank pattern — no per-round cut needed); each hop is one
@@ -1383,9 +1346,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .cache()  # plan-keyed: shared with triangle_count's oriented table
+        .localCheckpoint()
     )
-    _CACHED.append(oriented)
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
@@ -1488,9 +1450,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed = (
         tedges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(tedges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .cache()
+        .localCheckpoint()
     )
-    _CACHED.append(directed)
     labels = directed.select("node").distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1570,8 +1531,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     relax-then-min round is a join + (seed, node)-keyed aggregate —
     state is |seeds| x |reached|, bounded by construction.  The harmonic
     sum is integer ppm (1e6 div dist; dist is a small exact integer), so
-    no float reciprocal crosses the engine boundary.  Shares the cached
-    directed-edge table with the rest of the graph family.
+    no float reciprocal crosses the engine boundary.  Reads the same
+    checkpointed directed-edge table as BFS.
     """
     directed = directed_copurchase_edges(spark, sf_dir)
     seeds = (
@@ -1678,7 +1639,7 @@ def graph_louvain_move_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are ≤ 2m² — int64-safe to m ≈ 1.5e9 edges, same documented
     bound as modularity_brand.
 
-    Plan shape: the shared cached edge table feeds degree/total/link
+    Plan shape: the checkpointed edge table feeds degree/total/link
     aggregates (all node- or community-keyed); candidates are one hash
     join fan-out bounded by Σ_i |neighboring communities of i| ≤ 2m; the
     argmax is a node-keyed window.  Output: the moving nodes only.
@@ -1894,30 +1855,13 @@ def _louvain_phase1_oracle() -> str:
     """
 
 
-# Louvain phase-1 state per (SparkContext, fixture): the checkpointed graph
-# parts, the six-round trace rows, and the FINAL label table (VERDICT r11
-# ask #3 — phase 2 reran the entire phase-1 loop before its one contraction
-# aggregate, ~95% duplicate work and the suite's second-most-expensive
-# query).  Same discipline as the cached co-purchase edge tables above:
-# deterministic per fixture, shared across the family, dropped by
-# release_graph_caches().  Keyed by applicationId so a fresh SparkContext
-# never reads another context's dead localCheckpoint.
-_LOUVAIN_STATE: dict[tuple[str, str], dict] = {}
-
-
-def _louvain_state(spark: SparkSession, sf_dir: str) -> dict:
-    """Run the LOUVAIN_ROUNDS phase-1 loop ONCE per (app, fixture) and
-    memoize {"parts": (edges, directed, k, m_count, m_df, labels0),
-    "trace": [(round, n_proposed, n_applied, q_num), ...],
-    "labels": final checkpointed label table}.  phase 1 reports the
-    trace, phase 2 / the multilevel sweep consume the labels — the pair
-    costs one loop, not two."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    got = _LOUVAIN_STATE.get(key)
-    if got is not None:
-        return got
+def _louvain_phase1_loop(spark: SparkSession, sf_dir: str) -> dict:
+    """Run the LOUVAIN_ROUNDS phase-1 loop and return {"parts": (edges,
+    directed, k, m_count, m_df, labels0), "trace": [(round, n_proposed,
+    n_applied, q_num), ...], "labels": final checkpointed label table}.
+    Phase 1 reports the trace; phase 2, the multilevel sweep and the
+    Leiden refinement each run the loop for themselves and consume the
+    labels."""
     edges, directed, k, m_count, m_df, labels = _louvain_graph_parts(
         spark, sf_dir
     )
@@ -1960,9 +1904,7 @@ def _louvain_state(spark: SparkSession, sf_dir: str) -> dict:
     for r, (n_prop, n_ap, gsum) in enumerate(stats, start=1):
         q_cur = q_cur + 2 * gsum
         rows.append((r, n_prop, n_ap, q_cur))
-    out = {"parts": parts, "trace": rows, "labels": labels}
-    _LOUVAIN_STATE[key] = out
-    return out
+    return {"parts": parts, "trace": rows, "labels": labels}
 
 
 def _louvain_graph_parts(spark: SparkSession, sf_dir: str):
@@ -2163,12 +2105,10 @@ def graph_louvain_phase1(spark: SparkSession, sf_dir: str) -> DataFrame:
     with q_num the partition's Σ(4·m·e_c − d_c²) AFTER the round —
     strictly increasing while n_applied > 0 (pinned in tests).
 
-    The loop itself lives in ``_louvain_state`` (memoized per fixture —
-    VERDICT r11 ask #3), so within one session the phase-1/phase-2/
-    multilevel trio pays for ONE loop; the trace rows here are that
-    state's byproduct."""
+    The loop itself lives in ``_louvain_phase1_loop``; the trace rows
+    here are its byproduct."""
     return spark.createDataFrame(
-        _louvain_state(spark, sf_dir)["trace"],
+        _louvain_phase1_loop(spark, sf_dir)["trace"],
         "round int, n_proposed bigint, n_applied bigint, q_num bigint",
     )
 
@@ -2200,11 +2140,8 @@ def graph_louvain_phase2_aggregate(
     supernode's self-loop — the input to the next phase-1 sweep in the
     full Louvain recursion (Blondel et al. 2008 §2).
 
-    The phase-1 partition comes from the memoized ``_louvain_state``
-    (VERDICT r11 ask #3: this query used to rerun the whole
-    LOUVAIN_ROUNDS loop verbatim — ~95% duplicate work of
-    ``graph_louvain_phase1`` and the suite's second-most-expensive
-    query; now the pair costs one loop), then ONE community-keyed
+    The phase-1 partition comes from ``_louvain_phase1_loop`` (the
+    loop ``graph_louvain_phase1`` reports), then ONE community-keyed
     aggregate builds the contracted multigraph.  Modularity is
     INVARIANT under this
     contraction — Q of the weighted community graph under the identity
@@ -2220,7 +2157,7 @@ def graph_louvain_phase2_aggregate(
     plus two broadcast label joins and one (c_a, c_b)-keyed aggregate;
     the output is community-graph-sized — the whole point of phase 2 is
     that the next sweep runs on THIS much smaller graph."""
-    st = _louvain_state(spark, sf_dir)
+    st = _louvain_phase1_loop(spark, sf_dir)
     edges = st["parts"][0]
     labels = st["labels"]
     lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
@@ -2442,7 +2379,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     run ON the phase-2 contracted graph, completing the Blondel et al.
     2008 recursion over the support-thresholded co-purchase graph.
 
-    Level 1 is the memoized ``_louvain_state`` loop (LOUVAIN_ROUNDS
+    Level 1 is the ``_louvain_phase1_loop`` loop (LOUVAIN_ROUNDS
     conflict-free rounds from the brand seed — the exact trace
     ``graph_louvain_phase1`` reports).  Its final partition is
     contracted exactly as ``graph_louvain_phase2_aggregate`` does
@@ -2470,7 +2407,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall is pure scheduling (~20 supernodes); at 100 TB the contracted
     graph still has millions of supernodes and the same conflict-free
     parallelism bound applies."""
-    st = _louvain_state(spark, sf_dir)
+    st = _louvain_phase1_loop(spark, sf_dir)
     edges = st["parts"][0]
     m_count, m_df = st["parts"][3], st["parts"][4]
     labels1 = st["labels"]
@@ -2693,7 +2630,7 @@ def graph_leiden_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint union of communities — at 100 TB the per-community pieces
     are independent and the conflict-free matching parallelizes across
     all of them at once."""
-    st = _louvain_state(spark, sf_dir)
+    st = _louvain_phase1_loop(spark, sf_dir)
     edges = st["parts"][0]
     labels1 = st["labels"]
     lu = labels1.select(F.col("node").alias("u"), F.col("community").alias("cu"))

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, work_dir
 from hadoopmapreduce_spark.functions.numeric import dsum, sql_dsum
 from hadoopmapreduce_spark.registry import query
 
@@ -334,7 +334,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     workload's second query) find the tables in the catalog and skip
     straight to the exchange-free join."""
     import hashlib
-    import tempfile
 
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     t_orders, t_lineitem = f"hmr_b_orders_{key}", f"hmr_b_lineitem_{key}"
@@ -348,9 +347,10 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {t_lineitem}")
         orders = load_table(spark, sf_dir, "orders")
         lineitem = load_table(spark, sf_dir, "lineitem")
-        tmp = tempfile.mkdtemp(prefix="hmr_bucketed_")
-        # external tables under an explicit temp path: repo-independent of
-        # the session's warehouse dir (the driver's session points at cwd)
+        # external tables under one scratch dir per fixture, rewritten in
+        # place: repo-independent of the session's warehouse dir (the
+        # driver's session points at cwd)
+        tmp = work_dir("bucketed", sf_dir, fresh=True)
         (
             orders.select("o_orderkey", "o_orderpriority")
             .write.bucketBy(8, "o_orderkey")

@@ -6,28 +6,23 @@ join splitting, partition coalescing), UTC session timezone (required for
 oracle parity — DuckDB timestamps are UTC-naive), and Arrow for every
 Python-boundary crossing.
 
-Two settings are about reuse across queries in one process:
+One setting is about reuse across queries in one process:
+``spark.sql.codegen.cache.maxEntries`` sizes Spark's cache of compiled
+generated classes (whole-stage code, projections, orderings).  Its default,
+100, is split over four LRU segments, so a working set of about that size
+evicts, pass after pass, what the next pass needs: each warm pass of a short
+query mix re-runs Janino and leaves the JIT cold on the fresh classes.  One
+pass of the benchmark's six-query mix (``ctr_flagship``, q5,
+``sql_shared_revenue``, ``exact_dedup``, ``dedup_semantic_clustered``,
+``streaming_windowed_counts``) compiles 115 distinct classes; at the default
+cap its warm passes recompile 46-69 of them, at 1000 none.  The generated
+code is identical from pass to pass, so capacity is the only fault.  See
+``CODEGEN_CACHE_ENTRIES`` for the Tier-1 session's count and the memory
+cost.  The setting is static: it applies when the JVM starts, and a reused
+session keeps what it started with.
 
-* ``spark.sql.codegen.cache.maxEntries`` sizes Spark's cache of compiled
-  generated classes (whole-stage code, projections, orderings).  Its
-  default, 100, is split over four LRU segments, so a working set of about
-  that size evicts, pass after pass, what the next pass needs: each warm
-  pass of a short query mix re-runs Janino and leaves the JIT cold on the
-  fresh classes.  One pass of
-  the benchmark's six-query mix (``ctr_flagship``, q5,
-  ``sql_shared_revenue``, ``exact_dedup``, ``dedup_semantic_clustered``,
-  ``streaming_windowed_counts``) compiles 115 distinct classes; at the
-  default cap its warm passes recompile 46-69 of them, at 1000 none.  The
-  generated code is identical from pass to pass, so capacity is the only
-  fault.  See ``CODEGEN_CACHE_ENTRIES`` for the Tier-1 session's count and
-  the memory cost.
-* ``spark.executorEnv.PYTHONPATH`` puts this package's parent directory on
-  the Python workers' path.  A worker unpickles UDFs that reference
-  ``hadoopmapreduce_spark``; without it, a process started outside the
-  checkout fails with ``ModuleNotFoundError`` on the first pandas UDF.
-
-Both are static: they apply when the JVM starts, and a reused session keeps
-what it started with.
+The Python workers' ``PYTHONPATH`` is not set here but per query, in
+``catalog._ensure_session_confs``, so sessions built elsewhere get it too.
 """
 
 from __future__ import annotations
@@ -48,11 +43,6 @@ from hadoopmapreduce_spark.catalog import scratch_base
 # of heap and ~8 KB of metaspace.  Unbounded did not shorten the Tier-1
 # wall (1320 s, vs 1258 s at this cap and 1426 s at the default).
 CODEGEN_CACHE_ENTRIES = 1000
-
-# The directory that holds the ``hadoopmapreduce_spark`` package.
-_PACKAGE_PARENT = os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__))
-)
 
 
 def get_spark(
@@ -90,7 +80,6 @@ def get_spark(
         .config("spark.local.dir", scratch_base())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -72,3 +72,25 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
         lineitem, orders.o_orderkey == lineitem.l_orderkey
     ).count()
     assert bucketed_count == plain_count
+
+
+def test_bucketed_query_rewrites_one_scratch_dir(spark, sf_dir):
+    """``join_bucketed_colocated`` writes its bucketed tables under one
+    scratch dir per fixture: building them twice adds no
+    ``hmr_bucketed_*`` dir to the system tempdir, and both builds agree."""
+    import glob
+    import os
+    import tempfile
+
+    from hadoopmapreduce_spark.catalog import work_dir
+    from hadoopmapreduce_spark.operators.joins import join_bucketed_colocated
+
+    pattern = os.path.join(tempfile.gettempdir(), "hmr_bucketed_*")
+    before, results = set(glob.glob(pattern)), []
+    for _ in range(2):
+        for t in spark.catalog.listTables():
+            if t.name.startswith("hmr_b_"):
+                spark.sql(f"DROP TABLE {t.name}")
+        results.append(sorted(join_bucketed_colocated(spark, sf_dir).collect()))
+    assert results[0] == results[1]
+    assert set(glob.glob(pattern)) <= before | {work_dir("bucketed", sf_dir)}

@@ -66,83 +66,11 @@ def test_bench_printed_line_carries_canary_scalars():
         assert f'"{key}"' in src
 
 
-# --- Louvain shared state + multilevel (VERDICT r11 asks #3/#4) ------------
-
-
 def _registry():
     from hadoopmapreduce_spark import registry
 
     registry.load_all()
     return registry
-
-
-def test_louvain_state_shared_between_phase1_and_phase2(spark, sf_dir):
-    """VERDICT r11 ask #3: the pair must cost ONE loop.  phase 1 populates
-    the per-(app, fixture) state; phase 2 must consume it without a
-    second loop (observable as: the state dict gains exactly one entry
-    and phase 2 leaves it untouched)."""
-    from hadoopmapreduce_spark.operators import graph as G
-
-    registry = _registry()
-    G.release_graph_caches()
-    assert not G._LOUVAIN_STATE
-    registry.QUERIES["graph_louvain_phase1"](spark, sf_dir).collect()
-    assert len(G._LOUVAIN_STATE) == 1
-    key = next(iter(G._LOUVAIN_STATE))
-    before = G._LOUVAIN_STATE[key]
-    registry.QUERIES["graph_louvain_phase2_aggregate"](spark, sf_dir).collect()
-    assert G._LOUVAIN_STATE[key] is before  # reused, not recomputed
-    # and the release hook (extended per the ask) clears it
-    G.release_graph_caches()
-    assert not G._LOUVAIN_STATE
-
-
-def test_louvain_checkpoint_stats_do_not_compound(spark, sf_dir):
-    """The r12 BigInteger blow-up regression pin: localCheckpoint carries
-    the origin plan's estimated sizeInBytes, and the Louvain round plan
-    references the label table ~5 ways, so WITHOUT _stats_clean the
-    final label table's carried estimate had ~75k decimal DIGITS at
-    sf0.001 and four level-2 rounds seeded from it went
-    BigInteger-quadratic (measured 302 s for round 4 on 25 rows).  The
-    cleaned table must stay at the defaultSizeInBytes fallback scale."""
-    from hadoopmapreduce_spark.operators import graph as G
-
-    G.release_graph_caches()
-    st = G._louvain_state(spark, sf_dir)
-    jq = st["labels"]._jdf.queryExecution()
-    digits = len(str(jq.optimizedPlan().stats().sizeInBytes()))
-    assert digits <= 30, f"carried stats have {digits} digits — compounding"
-    G.release_graph_caches()
-
-
-def test_louvain_multilevel_trace_semantics(spark, sf_dir):
-    """The two-level trace: level-1 rows replicate the phase-1 trace
-    exactly; q_num is non-decreasing END-TO-END (level 2 opens at
-    level 1's final q by the contraction invariance and each weighted
-    conflict-free round applies the same ΔQ·4m² = Σ 2·gain identity);
-    and level 2 makes real progress on the fixture."""
-    from hadoopmapreduce_spark.operators import graph as G
-
-    registry = _registry()
-    G.release_graph_caches()
-    ml = registry.QUERIES["graph_louvain_multilevel"](spark, sf_dir).collect()
-    p1 = registry.QUERIES["graph_louvain_phase1"](spark, sf_dir).collect()
-    l1 = sorted(
-        (r["round"], r["n_proposed"], r["n_applied"], r["q_num"])
-        for r in ml
-        if r["level"] == 1
-    )
-    assert l1 == sorted(
-        (r["round"], r["n_proposed"], r["n_applied"], r["q_num"]) for r in p1
-    )
-    l2 = sorted((r["round"], r["n_applied"], r["q_num"]) for r in ml if r["level"] == 2)
-    assert len(l2) == G.L2_ROUNDS
-    qs = [l1[-1][3]] + [q for _, _, q in l2]
-    assert all(b >= a for a, b in zip(qs, qs[1:])), qs
-    # level 2 applied at least one move on the fixture (it refines, not
-    # a vacuous fixpoint)
-    assert sum(a for _, a, _ in l2) >= 1
-    G.release_graph_caches()
 
 
 # --- BM25 ranked retrieval (VERDICT r11 ask #5) -----------------------------
@@ -323,53 +251,3 @@ def test_bleu_components_semantics(spark, sf_dir):
 
     assert statistics.median(r.p1_ppm for r in rows) > 300_000
     assert statistics.median(r.p4_ppm for r in rows) < 200_000
-
-
-# --- Leiden-style refinement (community-arc capstone) ------------------------
-
-
-def test_leiden_refine_nests_within_phase1(spark, sf_dir):
-    """The refinement constraint must emerge from the intra-edge filter:
-    every refined community's nodes map into EXACTLY ONE phase-1
-    community, and the trace is monotone from the negative singleton
-    q0 with real first-round parallelism (the fine-grained regime)."""
-    import pyspark.sql.functions as F
-
-    from hadoopmapreduce_spark.operators import graph as G
-
-    registry = _registry()
-    G.release_graph_caches()
-    trace = registry.QUERIES["graph_leiden_refine"](spark, sf_dir).collect()
-    qs = [r.q_num for r in trace]
-    assert qs == sorted(qs), qs
-    assert trace[0].n_applied > 20  # singleton seed: real parallelism
-    # rebuild the refined labels by replaying the rounds on the shared
-    # state and check nesting
-    st = G._louvain_state(spark, sf_dir)
-    edges, labels1 = st["parts"][0], st["labels"]
-    lu = labels1.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = labels1.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    iedges = (
-        edges.join(F.broadcast(lu), "u").join(F.broadcast(lv), "v")
-        .where(F.col("cu") == F.col("cv")).select("u", "v").localCheckpoint()
-    )
-    directed = (
-        iedges.selectExpr("u AS node", "v AS nbr")
-        .unionAll(iedges.selectExpr("v AS node", "u AS nbr")).localCheckpoint()
-    )
-    k = directed.groupBy("node").agg(F.count(F.lit(1)).alias("ki")).localCheckpoint()
-    m_df = spark.createDataFrame([(iedges.count(),)], "m bigint")
-    labels = directed.select("node").distinct().select(
-        "node", F.col("node").alias("community")
-    )
-    for _ in range(G.REFINE_ROUNDS):
-        _m, _a, labels = G._louvain_apply_round(directed, labels, k, m_df)
-    spans = (
-        labels.join(labels1.withColumnRenamed("community", "p1"), "node")
-        .groupBy("community")
-        .agg(F.countDistinct("p1").alias("n_p1"))
-        .agg(F.max("n_p1").alias("mx"))
-        .first()
-    )
-    assert spans["mx"] == 1  # no refined community crosses a phase-1 one
-    G.release_graph_caches()

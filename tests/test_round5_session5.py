@@ -249,14 +249,12 @@ def test_jaccard_hub_cap_active_region(spark, tmp_path, monkeypatch):
     )
     parts.write.mode("overwrite").parquet(f"{tmp_path}/part.parquet")
 
-    G.release_graph_caches()
     monkeypatch.setattr(G, "JACCARD_HUB_CAP", 64)
     got = G.graph_neighbor_jaccard_top(spark, str(tmp_path)).collect()
     # 45 leaf pairs (common = the 2 hubs) + the hub pair (common = 10 leaves)
     assert len(got) == 46
     assert sorted(r["common"] for r in got) == [2] * 45 + [10]
 
-    G.release_graph_caches()
     monkeypatch.setattr(G, "JACCARD_HUB_CAP", 5)
     # hubs (deg 10) excluded as centers: leaf pairs lose their only common
     # neighbors; the hub pair survives via the 10 leaf centers (deg 2)
@@ -264,7 +262,6 @@ def test_jaccard_hub_cap_active_region(spark, tmp_path, monkeypatch):
     assert [(r["u"], r["v"], r["common"]) for r in survivors] == [
         (1001, 1002, 10)
     ]
-    G.release_graph_caches()
 
 
 def test_jaccard_fixture_sanity(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Round-8 session-1 regressions — the four ADVICE r7 items:
+"""Round-8 session-1 regressions from the ADVICE r7 items:
 
 * ``distributed_ntile`` must sever lineage (eager localCheckpoint, not
   ``cache()``): a cache-evicted block would silently recompute with a
@@ -13,9 +13,6 @@
   survive the CRLF-tolerant reader's framing: an embedded ``\\n`` and a
   value ending in ``\\r`` — round-trips are lossless by CONTRACT now,
   and the reader comment says so instead of claiming \\n-only framing.
-* ``bench.py`` must drain the graph cache registry between query
-  families (the suite previously accumulated resident entries per run —
-  the storage-pressure failure mode graph.py documents).
 """
 
 from __future__ import annotations
@@ -116,18 +113,6 @@ def test_textkv_writer_allows_embedded_cr_and_roundtrips(spark, tmp_path):
         for r in spark.read.format("textkv").load(str(path)).collect()
     }
     assert got == dict(rows)
-
-
-def test_bench_drains_cache_registries(spark, sf_dir):
-    """bench._drain_caches must empty the graph release registry after a
-    query that populates it has been materialized."""
-    import bench
-    from hadoopmapreduce_spark.operators import graph
-
-    graph.copurchase_edges(spark, sf_dir).count()
-    assert len(graph._CACHED) >= 1
-    bench._drain_caches()
-    assert graph._CACHED == []
 
 
 def test_semdedup_kernel_matches_sql_formulation(spark, sf_dir):

@@ -50,35 +50,53 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     assert _compiles(spark) == before
 
 
+def _run_probe(tmp_path, body: str) -> None:
+    """Run ``body`` from ``tmp_path`` (outside the checkout) with
+    ``PYTHONPATH`` unset and a pandas-UDF query at the end."""
+    script = tmp_path / "probe.py"
+    script.write_text(textwrap.dedent(body) + textwrap.dedent("""
+        print("rows", q(spark, SF).count())
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "rows " in r.stdout
+
+
 def test_python_workers_import_package_from_any_cwd(tmp_path, sf_dir):
     """A script outside the checkout that puts the checkout on its own
     ``sys.path`` (no ``PYTHONPATH``) runs a pandas-UDF query: the workers,
     which unpickle functions of this package, must find it too."""
-    script = tmp_path / "probe.py"
-    script.write_text(textwrap.dedent(f"""
+    _run_probe(tmp_path, f"""
         import sys
         sys.path.insert(0, {REPO_ROOT!r})
         from hadoopmapreduce_spark import registry
         from hadoopmapreduce_spark.session import get_spark
 
-        spark = get_spark("worker-path-probe", cpus=2)
+        spark, SF = get_spark("worker-path-probe", cpus=2), {sf_dir!r}
         registry.load_all()
         q = registry.QUERIES["dedup_semantic_clustered"]
-        print("rows", q(spark, {sf_dir!r}).count())
-        spark.stop()
-    """))
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
-    r = subprocess.run(
-        [sys.executable, str(script)],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert r.returncode == 0, r.stderr[-3000:]
-    assert "rows " in r.stdout
+    """)
+
+
+def test_python_workers_import_package_from_plain_session(tmp_path, sf_dir):
+    """The driver contract: a plain ``SparkSession`` (none of
+    ``get_spark``'s settings) loads ``__spark_entry__.py`` by path from a
+    working directory outside the checkout and runs the same query."""
+    _run_probe(tmp_path, f"""
+        import importlib.util
+        from pyspark.sql import SparkSession
+
+        spec = importlib.util.spec_from_file_location(
+            "entry", {os.path.join(REPO_ROOT, "__spark_entry__.py")!r})
+        m = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(m)
+        spark, SF = SparkSession.builder.master("local[2]").getOrCreate(), {sf_dir!r}
+        q = m.queries()["dedup_semantic_clustered"]
+    """)
 
 
 def test_replay_partitions_fit_the_replay(spark, sf_dir):

@@ -5,8 +5,11 @@ the batch aggregate, with one versioned snapshot per merge."""
 from __future__ import annotations
 
 import datetime as dt
+import shutil
 
 from pyspark.sql import functions as F
+
+from hadoopmapreduce_spark.catalog import work_dir
 
 
 def test_streaming_merge_accumulates_across_batches(spark, tmp_path, monkeypatch):
@@ -30,8 +33,13 @@ def test_streaming_merge_accumulates_across_batches(spark, tmp_path, monkeypatch
         f"{tmp_path}/events.parquet"
     )
     monkeypatch.setenv("SPARK_GRAFT_STREAM_MERGE_FILES_PER_TRIGGER", "1")
-    out = {
-        r.user_id: (r.n_purchases, r.total_value)
-        for r in streaming_merge_upsert(spark, str(tmp_path)).collect()
-    }
+    try:
+        out = {
+            r.user_id: (r.n_purchases, r.total_value)
+            for r in streaming_merge_upsert(spark, str(tmp_path)).collect()
+        }
+    finally:
+        # the snapshots live in a scratch dir keyed by this test's own
+        # tmp_path, which no later run reuses
+        shutil.rmtree(work_dir("stream_merge", str(tmp_path)))
     assert out == {1: (2, 12.5), 2: (1, 7.0)}
