@@ -611,30 +611,27 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.col("doc_a"), F.min("doc_b")).alias("lbl")
     )
     MAX_ROUNDS = 12
-    from hadoopmapreduce_spark.session import iter_state_shuffle
-
-    with iter_state_shuffle(spark, sym.count()):
-        for _ in range(MAX_ROUNDS):
-            neighbor_lbls = (
-                sym.join(labels.withColumnRenamed("node", "doc_b"), "doc_b")
-                .groupBy(F.col("doc_a").alias("node"))
-                .agg(F.min("lbl").alias("nlbl"))
+    for _ in range(MAX_ROUNDS):
+        neighbor_lbls = (
+            sym.join(labels.withColumnRenamed("node", "doc_b"), "doc_b")
+            .groupBy(F.col("doc_a").alias("node"))
+            .agg(F.min("lbl").alias("nlbl"))
+        )
+        stepped = (
+            labels.join(neighbor_lbls, "node", "left")
+            .select(
+                "node",
+                F.col("lbl").alias("prev_lbl"),
+                F.least(
+                    F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
+                ).alias("lbl"),
             )
-            stepped = (
-                labels.join(neighbor_lbls, "node", "left")
-                .select(
-                    "node",
-                    F.col("lbl").alias("prev_lbl"),
-                    F.least(
-                        F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
-                    ).alias("lbl"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = stepped.filter(F.col("lbl") < F.col("prev_lbl")).count()
-            labels = stepped.select("node", "lbl")
-            if changed == 0:
-                break
+            .localCheckpoint(eager=True)
+        )
+        changed = stepped.filter(F.col("lbl") < F.col("prev_lbl")).count()
+        labels = stepped.select("node", "lbl")
+        if changed == 0:
+            break
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_doc_id")
     )
@@ -731,16 +728,13 @@ def connected_components_twostar(pairs: DataFrame) -> DataFrame:
 
     MAX_ROUNDS = 8  # 2^8 node ids of headroom — log2(n) bound, not diameter
     prev_sig = signature(edges)
-    from hadoopmapreduce_spark.session import iter_state_shuffle
-
-    with iter_state_shuffle(pairs.sparkSession, prev_sig[0] or 1):
-        for _ in range(MAX_ROUNDS):
-            edges = star_round(edges, large=True)
-            edges = star_round(edges, large=False)
-            sig = signature(edges)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
+    for _ in range(MAX_ROUNDS):
+        edges = star_round(edges, large=True)
+        edges = star_round(edges, large=False)
+        sig = signature(edges)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     # stable state: edges = {(v, min_of_component) both directions};
     # labels fall out as the per-node min over the star edges
     return edges.groupBy(F.col("src").alias("doc_id")).agg(

@@ -363,23 +363,19 @@ def bfs_relax_min(
     ``dedup_clusters_twostar`` uses for its star rounds.  At cluster scale
     this is one node-keyed shuffle + one label-table materialization per
     round, independent of round count."""
-    from hadoopmapreduce_spark.session import iter_state_shuffle
-
-    n_nodes = directed.select("src").distinct().count()
     dist = sources
-    with iter_state_shuffle(directed.sparkSession, n_nodes):
-        for _ in range(rounds):
-            propagated = directed.join(
-                dist, directed["src"] == dist["node"]
-            ).select(
-                F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
-            )
-            dist = (
-                dist.unionByName(propagated)
-                .groupBy("node")
-                .agg(F.min("dist").cast("long").alias("dist"))
-                .localCheckpoint(eager=True)
-            )
+    for _ in range(rounds):
+        propagated = directed.join(
+            dist, directed["src"] == dist["node"]
+        ).select(
+            F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
+        )
+        dist = (
+            dist.unionByName(propagated)
+            .groupBy("node")
+            .agg(F.min("dist").cast("long").alias("dist"))
+            .localCheckpoint(eager=True)
+        )
     return dist
 
 
@@ -458,30 +454,27 @@ def kcore_peel_trace(
     n_directed0 = directed.count()
     k = n_directed0 // n_nodes0 - k_offset
     trace: list[tuple[int, int, int]] = []
-    from hadoopmapreduce_spark.session import iter_state_shuffle
-
-    with iter_state_shuffle(spark, n_nodes0):
-        for r in range(rounds + 1):
-            deg = (
-                directed.join(alive.select(F.col("node").alias("src")), "src")
-                .join(alive.select(F.col("node").alias("dst")), "dst")
-                .groupBy("src")
-                .agg(F.count(F.lit(1)).alias("deg"))
+    for r in range(rounds + 1):
+        deg = (
+            directed.join(alive.select(F.col("node").alias("src")), "src")
+            .join(alive.select(F.col("node").alias("dst")), "dst")
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .localCheckpoint(eager=True)
+        )
+        n_alive = alive.count()
+        tot_deg = deg.agg(
+            F.coalesce(F.sum("deg"), F.lit(0)).cast("long").alias("t")
+        ).collect()[0][0]
+        trace.append((r, n_alive, tot_deg // 2))
+        if r < rounds:
+            # nodes with zero induced edges are absent from `deg` and
+            # thus (correctly) peeled: degree below any positive k
+            alive = (
+                deg.filter(F.col("deg") >= k)
+                .select(F.col("src").alias("node"))
                 .localCheckpoint(eager=True)
             )
-            n_alive = alive.count()
-            tot_deg = deg.agg(
-                F.coalesce(F.sum("deg"), F.lit(0)).cast("long").alias("t")
-            ).collect()[0][0]
-            trace.append((r, n_alive, tot_deg // 2))
-            if r < rounds:
-                # nodes with zero induced edges are absent from `deg` and
-                # thus (correctly) peeled: degree below any positive k
-                alive = (
-                    deg.filter(F.col("deg") >= k)
-                    .select(F.col("src").alias("node"))
-                    .localCheckpoint(eager=True)
-                )
     return spark.createDataFrame(
         trace, "round bigint, n_nodes bigint, n_edges bigint"
     )
@@ -1208,21 +1201,15 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed = directed_copurchase_edges(spark, sf_dir)
     from pyspark.sql import Window as W
 
-    from hadoopmapreduce_spark.session import iter_state_shuffle
-
-    with iter_state_shuffle(spark, directed.count()):
-        adj = directed.select(
-            "src",
-            "dst",
-            F.row_number()
-            .over(W.partitionBy("src").orderBy("dst"))
-            .cast("long")
-            .alias("rnk"),
-            F.count(F.lit(1))
-            .over(W.partitionBy("src"))
-            .cast("long")
-            .alias("deg"),
-        ).localCheckpoint(eager=True)
+    adj = directed.select(
+        "src",
+        "dst",
+        F.row_number()
+        .over(W.partitionBy("src").orderBy("dst"))
+        .cast("long")
+        .alias("rnk"),
+        F.count(F.lit(1)).over(W.partitionBy("src")).cast("long").alias("deg"),
+    ).localCheckpoint(eager=True)
     part = load_table(spark, sf_dir, "part")
     seeds = (
         part.join(
@@ -1657,8 +1644,8 @@ def graph_louvain_move_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("node"),
         F.col("p_brand").alias("community"),
     )
-    directed = edges.selectExpr("u AS node", "v AS nbr").unionAll(
-        edges.selectExpr("v AS node", "u AS nbr")
+    directed = edges.selectExpr("u AS node", "v AS nbr", "1 AS w").unionAll(
+        edges.selectExpr("v AS node", "u AS nbr", "1 AS w")
     )
     k = directed.groupBy("node").agg(F.count(F.lit(1)).alias("ki"))
     m = edges.agg(F.count(F.lit(1)).alias("m"))
@@ -1679,7 +1666,15 @@ def _louvain_best_moves(
     ``graph_louvain_phase1`` can re-evaluate it per round against the
     evolving partition.  Returns (node, o, c, gain_num, m_edges): each
     node's best strictly-positive-gain move under the division-free
-    integer ordering (gain DESC, community ASC)."""
+    integer ordering (gain DESC, community ASC).
+
+    ``directed`` carries (node, nbr, w) in both directions: w = 1 on the
+    level-1 graph; on the contracted level-2 graph w is the summed edge
+    weight, ``directed`` holds the NON-self edges only, and ``k`` is the
+    full weighted degree INCLUDING 2x the node's self-loop weight
+    (self-loops never enter k_ic — they stay intra under any move — but
+    they do count in k_i and Σ).  Total edge weight m is INVARIANT under
+    contraction, so the same m table serves both levels."""
     tot = (
         labels.join(k, "node")
         .groupBy("community")
@@ -1693,7 +1688,7 @@ def _louvain_best_moves(
             "nbr",
         )
         .groupBy("node", "c")
-        .agg(F.count(F.lit(1)).alias("kic"))
+        .agg(F.sum("w").alias("kic"))
     )
     own = (
         links.join(labels, "node")
@@ -1912,8 +1907,8 @@ def _louvain_graph_parts(spark: SparkSession, sf_dir: str):
     co-purchase graph: (edges, directed, k, m_count, m_df, labels0)."""
     edges = thresholded_copurchase_edges(spark, sf_dir).localCheckpoint()
     directed = (
-        edges.selectExpr("u AS node", "v AS nbr")
-        .unionAll(edges.selectExpr("v AS node", "u AS nbr"))
+        edges.selectExpr("u AS node", "v AS nbr", "1 AS w")
+        .unionAll(edges.selectExpr("v AS node", "u AS nbr", "1 AS w"))
         .localCheckpoint()  # consumed by links EVERY round — cut once
     )
     k = directed.groupBy("node").agg(
@@ -1983,27 +1978,23 @@ def _internal_create_dataframe(df: DataFrame) -> DataFrame:
     return DataFrame(clean, df.sparkSession)
 
 
-def _louvain_apply_round(directed, labels, k, m_df, best_moves_fn=None):
+def _louvain_apply_round(directed, labels, k, m_df):
     """One conflict-free Louvain round: (moves, applied, new_labels).
-    Only ``moves`` (the expensive evaluation) is EAGERLY checkpointed —
-    one job per round.  ``applied`` is a cheap window over the
-    checkpointed move table and stays lazy, and since r14 ``new_labels``
-    is a NON-eager checkpoint: the next round's move-checkpoint job (or
-    the loop-end stats action) materializes it, which removed one
-    scheduling-bound job per round (VERDICT r13 ask #3 — measured ~0.3 s
-    of pure per-job overhead on the fixture-sized graph; at scale the
-    same change removes a full materialization barrier per round).  The
-    label re-wrap still goes through ``_stats_clean`` so carried Catalyst
+    ``moves`` (the expensive evaluation) and ``new_labels`` are EAGERLY
+    checkpointed; ``applied`` is a cheap window over the checkpointed
+    move table and stays lazy.  The labels cannot be a lazy checkpoint:
+    the next round's move evaluation reads them from several concurrent
+    AQE jobs, the first of those to finish marks the checkpoint done and
+    drops its lineage while the others still run tasks over it, and once
+    the driver collects that plan their SQL-metric updates hit
+    non-existent accumulators (Spark logs an ERROR per update).  The
+    label re-wrap goes through ``_stats_clean`` so carried Catalyst
     stats cannot compound across rounds.  See graph_louvain_phase1 for
-    the monotonicity argument.  ``best_moves_fn`` defaults to the
-    unweighted evaluator; the level-2 multilevel sweep passes the
-    weighted one — the conflict-free selection and re-label are
-    evaluator-agnostic."""
+    the monotonicity argument; ``_louvain_best_moves`` serves both the
+    unweighted level-1 graph and the weighted level-2 one."""
     from pyspark.sql import Window as W
 
-    if best_moves_fn is None:
-        best_moves_fn = _louvain_best_moves
-    moves = best_moves_fn(directed, labels, k, m_df).select(
+    moves = _louvain_best_moves(directed, labels, k, m_df).select(
         "node", "o", "c", "gain_num"
     ).localCheckpoint()
     wcl = W.partitionBy("comm").orderBy(F.desc("gain_num"), F.asc("node"))
@@ -2027,7 +2018,7 @@ def _louvain_apply_round(directed, labels, k, m_df, best_moves_fn=None):
             "node",
             F.coalesce("new_c", "community").alias("community"),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     return moves, applied, new_labels
 
@@ -2187,79 +2178,6 @@ L2_ROUNDS = 4  # bounded level-2 rounds; the contracted fixture graph has
                # ~20 supernodes, and the oracle unrolls the same count
 
 
-def _louvain_best_moves_w(
-    directed_w: DataFrame, labels: DataFrame, k: DataFrame, m: DataFrame
-) -> DataFrame:
-    """Weighted twin of ``_louvain_best_moves`` for the contracted graph:
-    ``directed_w`` carries (node, nbr, w) for NON-self edges in both
-    directions, ``k`` is the full weighted degree INCLUDING 2x the
-    node's self-loop weight (self-loops never enter k_ic — they stay
-    intra under any move — but they do count in k_i and Σ).  The gain
-    numerator 2m·(k_ic − k_io) − k_i·(Σ_c − (Σ_o − k_i)) is unchanged;
-    k_ic/k_io become weight sums.  Total edge weight m is INVARIANT
-    under contraction, so the same m table serves both levels."""
-    tot = (
-        labels.join(k, "node")
-        .groupBy("community")
-        .agg(F.sum("ki").alias("sig"))
-    )
-    links = (
-        directed_w.join(
-            labels.select(
-                F.col("node").alias("nbr"), F.col("community").alias("c")
-            ),
-            "nbr",
-        )
-        .groupBy("node", "c")
-        .agg(F.sum("w").alias("kic"))
-    )
-    own = (
-        links.join(labels, "node")
-        .groupBy("node", F.col("community").alias("o"))
-        .agg(
-            F.coalesce(
-                F.max(
-                    F.when(F.col("c") == F.col("community"), F.col("kic"))
-                ),
-                F.lit(0),
-            ).alias("kio")
-        )
-    )
-    cand = (
-        links.join(own, "node")
-        .filter(F.col("c") != F.col("o"))
-        .join(k, "node")
-        .join(
-            tot.select(F.col("community").alias("o"), F.col("sig").alias("sig_o")),
-            "o",
-        )
-        .join(
-            tot.select(F.col("community").alias("c"), F.col("sig").alias("sig_c")),
-            "c",
-        )
-        .crossJoin(F.broadcast(m))
-        .select(
-            "node",
-            "o",
-            "c",
-            (
-                2 * F.col("m") * (F.col("kic") - F.col("kio"))
-                - F.col("ki")
-                * (F.col("sig_c") - (F.col("sig_o") - F.col("ki")))
-            ).alias("gain_num"),
-            F.col("m").alias("m_edges"),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("node").orderBy(F.desc("gain_num"), F.asc("c"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter((F.col("rk") == 1) & (F.col("gain_num") > 0))
-        .drop("rk")
-    )
-
-
 def _louvain_round_sql_w(r: int) -> str:
     """One WEIGHTED Louvain round over the contracted graph as a CTE
     block (level-2 twin of ``_louvain_round_sql``; all names suffixed
@@ -2385,8 +2303,8 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracted exactly as ``graph_louvain_phase2_aggregate`` does
     (supernode per community, parallel edges summed to integer weights,
     intra edges as self-loops), and level 2 reruns the SAME conflict-free
-    machinery with the weighted move evaluator from the identity seed
-    (each supernode its own community).
+    machinery, summing link weights, from the identity seed (each
+    supernode its own community).
 
     Cross-level exactness: total edge weight and degree mass are
     invariant under contraction, so level 2 opens at q_num EXACTLY equal
@@ -2465,7 +2383,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(1, r, p, a, q) for (r, p, a, q) in st["trace"]]
     for r in range(1, L2_ROUNDS + 1):
         moves, applied, labels2 = _louvain_apply_round(
-            directed2, labels2, k2, m_df, best_moves_fn=_louvain_best_moves_w
+            directed2, labels2, k2, m_df
         )
         stt = (
             moves.agg(F.count(F.lit(1)).alias("n_prop"))
@@ -2643,8 +2561,8 @@ def graph_leiden_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     directed = (
-        iedges.selectExpr("u AS node", "v AS nbr")
-        .unionAll(iedges.selectExpr("v AS node", "u AS nbr"))
+        iedges.selectExpr("u AS node", "v AS nbr", "1 AS w")
+        .unionAll(iedges.selectExpr("v AS node", "u AS nbr", "1 AS w"))
         .localCheckpoint()
     )
     k = directed.groupBy("node").agg(

@@ -1473,8 +1473,6 @@ def power_iteration_loop(
         ).collect()[0]
         q = pi_grid_shift(pre["n"], float(pre["vmax"] or 0.0), dim)
         grid = float(1 << q)
-        from hadoopmapreduce_spark.session import iter_state_shuffle
-
         for _ in range(iters):
             # x rides in as ONE array literal (a single py4j call; the
             # former per-element F.array(*[F.lit(val)]) cost 65 driver
@@ -1489,28 +1487,22 @@ def power_iteration_loop(
             # the optimizer collapses the projection into the aggregate,
             # duplicating the transform lambda per column (giant plan,
             # codegen blowup).  The remaining per-iteration cost is
-            # fixed job/stage overhead, which vanishes at scale.
-            # the final aggregate's state is `dim` rows — size its
-            # exchange to the state (iter_state_shuffle), not the session
-            # parallelism: map-side partial aggregation already bounds
-            # what crosses the exchange to dim rows per map task, so the
-            # reduce side needs one task, exactly what AQE's coalescing
-            # would pick (the per-round eager-action path AQE can't see)
-            with iter_state_shuffle(cached.sparkSession, dim):
-                rows = (
-                    cached.select(
-                        d.alias("d"), F.posexplode("v").alias("j0", "vj")
-                    )
-                    .select(
-                        (F.col("j0") + 1).alias("j"),
-                        F.round(F.col("vj") * F.col("d") * F.lit(grid))
-                        .cast("long")
-                        .alias("qv"),
-                    )
-                    .groupBy("j")
-                    .agg(F.sum("qv").alias("yi"))
-                    .collect()  # bounded: dim rows of model state
+            # fixed job/stage overhead, which vanishes at scale.  Map-side
+            # partial aggregation bounds what crosses the exchange to dim
+            # rows per map task, and AQE coalesces the reduce side to one
+            # task for that dim-row state.
+            rows = (
+                cached.select(d.alias("d"), F.posexplode("v").alias("j0", "vj"))
+                .select(
+                    (F.col("j0") + 1).alias("j"),
+                    F.round(F.col("vj") * F.col("d") * F.lit(grid))
+                    .cast("long")
+                    .alias("qv"),
                 )
+                .groupBy("j")
+                .agg(F.sum("qv").alias("yi"))
+                .collect()  # bounded: dim rows of model state
+            )
             y = {r["j"]: int(r["yi"]) for r in rows}
             m = max(abs(v) for v in y.values())
             sh = max(m.bit_length() - 1, 0)

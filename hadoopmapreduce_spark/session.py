@@ -85,43 +85,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-class iter_state_shuffle:
-    """Scope ``spark.sql.shuffle.partitions`` to a STATE-proportional value
-    around an iterative DataFrame loop, restoring the previous value on
-    exit.
-
-    Why: the per-round eager ``localCheckpoint`` that cuts an iterative
-    operator's lineage executes through the RDD path, which AQE does not
-    re-optimize — so the node-sized per-round state (tens of KB) is
-    shuffled and checkpointed across the FULL session partition count,
-    and the fixed per-task cost dominates the loop (measured ~0.55 s per
-    round at 32 partitions vs ~0.28 s at 8 for a 100k-row round on this
-    hardware).  Sizing the shuffle to the state (``ceil(rows / 100k)``,
-    min 1, capped at the session setting so big state keeps full
-    parallelism) is exactly what AQE's coalescing would have chosen.
-
-    Only the eagerly-materialized per-round plans are affected: the
-    DataFrame a query RETURNS executes after the scope exits, at the
-    session's normal setting, and cached upstream tables (edges, degrees)
-    are matched by canonicalized LOGICAL plan, which does not include
-    partition counts — cache reuse is unaffected.  The driver runs
-    queries sequentially; a concurrently-planning query in the same
-    session would observe the scoped value (documented trade-off)."""
-
-    ROWS_PER_PARTITION = 100_000
-
-    def __init__(self, spark: SparkSession, state_rows: int):
-        self.spark = spark
-        want = max(1, (state_rows + self.ROWS_PER_PARTITION - 1)
-                   // self.ROWS_PER_PARTITION)
-        self.old = spark.conf.get("spark.sql.shuffle.partitions")
-        self.n = min(int(self.old), want)
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False

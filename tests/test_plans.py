@@ -330,7 +330,12 @@ def test_bfs_constant_plan_per_round(spark, sf_dir):
     no lineage cut, so the physical plan doubled every round (2^rounds
     recomputations).  Pin the fix: the per-round eager localCheckpoint makes
     every returned label table a materialized-RDD scan, and the NEXT round's
-    plan has the same exchange count no matter how deep the BFS already is."""
+    plan has the same exchange count no matter how deep the BFS already is.
+
+    The loop runs at the session's shuffle setting, and AQE alone sizes
+    each round's node-keyed shuffle to its node-sized state: the eagerly
+    checkpointed labels land in one partition, not in one per session
+    shuffle partition."""
     from pyspark.sql import functions as F
 
     from hadoopmapreduce_spark.operators.graph import (
@@ -358,8 +363,12 @@ def test_bfs_constant_plan_per_round(spark, sf_dir):
         )
         return plan.count("Exchange")
 
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    assert shuffle_partitions == "8"
     d1 = bfs_relax_min(directed, sources, rounds=1)
     d3 = bfs_relax_min(directed, sources, rounds=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
+    assert d3._jdf.rdd().getNumPartitions() == 1
     # lineage severed: the label table is a scan of a materialized RDD
     assert "ExistingRDD" in physical_plan(d1)
     # constant per-round work: plan size independent of BFS depth

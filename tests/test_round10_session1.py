@@ -114,31 +114,6 @@ def test_pi_grid_shift_bound_holds_adversarially():
         pi_grid_shift(10**18, 1.0e9, 64)
 
 
-def test_power_iteration_adversarial_magnitude(spark):
-    """Vectors with |v| ~ 1e6 force the derived grid BELOW 2^30; the
-    distributed loop must still run without ANSI overflow and match the
-    pure-Python referee bit-for-bit on the coarser grid."""
-    from hadoopmapreduce_spark.operators.similarity import (
-        pi_grid_shift,
-        power_iteration_loop,
-    )
-    from test_round9_session1 import _pi_python_referee
-
-    V = [
-        [1.0e6 * (((i * 7 + j * 13) % 11) - 5) / 5.0 for j in range(4)]
-        for i in range(20)
-    ]
-    vmax = max(abs(a) for row in V for a in row)
-    q = pi_grid_shift(len(V), vmax, 4)
-    assert q < 30, q  # the adversarial case must actually exercise it
-    e = spark.createDataFrame([(r,) for r in V], "v array<double>").repartition(3)
-    got_x, got_y = power_iteration_loop(e, 4, 4)
-    exp_x, exp_y = _pi_python_referee(V, 4)
-    assert got_y == exp_y
-    assert got_x == exp_x
-    assert max(abs(v) for v in got_y.values()) < 2 ** 62
-
-
 def test_pi_grid_sql_twin_matches_python():
     """The oracle's SQL derivation of the grid must equal pi_grid_shift
     on the same relation — run both over synthetic corpora in DuckDB."""

@@ -228,8 +228,8 @@ def test_louvain_conflict_free_selection_is_community_unique(spark):
 
     sf_dir = "/root/testdata/sf0.01"
     edges = thresholded_copurchase_edges(spark, sf_dir)
-    directed = edges.selectExpr("u AS node", "v AS nbr").unionAll(
-        edges.selectExpr("v AS node", "u AS nbr")
+    directed = edges.selectExpr("u AS node", "v AS nbr", "1 AS w").unionAll(
+        edges.selectExpr("v AS node", "u AS nbr", "1 AS w")
     )
     k = directed.groupBy("node").agg(F.count(F.lit(1)).alias("ki"))
     m_df = edges.agg(F.count(F.lit(1)).alias("m"))

@@ -65,41 +65,6 @@ def test_incremental_corpus_partitions_delta(spark, sf_dir):
     assert "new" in out and out["new"]["n_docs"] > 0
 
 
-def test_wcc_size_census_conserves_nodes(spark, sf_dir):
-    from hadoopmapreduce_spark.operators.graph import (
-        WCC_MIN_SUPPORT,
-        graph_wcc_components,
-    )
-    from hadoopmapreduce_spark.catalog import load_table
-
-    census = graph_wcc_components(spark, sf_dir).collect()
-    n_from_census = sum(r["size"] * r["n_components"] for r in census)
-    items = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= WCC_MIN_SUPPORT)
-    )
-    n_nodes = (
-        edges.select(F.col("u").alias("x"))
-        .unionByName(edges.select(F.col("v").alias("x")))
-        .distinct()
-        .count()
-    )
-    assert n_from_census == n_nodes
-    assert all(r["size"] >= 2 for r in census), "edge endpoints only"
-
-
 def test_max_drawdown_on_signed_flows(spark):
     from hadoopmapreduce_spark.operators.windows import max_drawdown
     from pyspark.sql import functions as F

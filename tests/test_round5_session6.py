@@ -311,35 +311,6 @@ def test_modularity_identities(spark, sf_dir):
     assert -2 * m * m <= q_4m2 <= 4 * m * m
 
 
-def test_random_walks_traverse_real_edges(spark, sf_dir):
-    """Every consecutive hop in every walk must be an actual co-purchase
-    edge, every path must have WALK_STEPS+1 nodes, and there must be one
-    walk per reachable seed — the properties that make the corpus a valid
-    skip-gram input."""
-    from hadoopmapreduce_spark.operators.graph import (
-        WALK_STEPS,
-        directed_copurchase_edges,
-        graph_random_walks,
-    )
-
-    walks = graph_random_walks(spark, sf_dir)
-    rows = walks.collect()
-    assert rows, "no walks generated"
-    assert len(rows) == len({r["walk_id"] for r in rows})
-    hops = []
-    for r in rows:
-        nodes = [int(x) for x in r["path"].split(":")]
-        assert len(nodes) == WALK_STEPS + 1, r["path"]
-        assert nodes[0] == r["walk_id"] and nodes[-1] == r["end_node"]
-        hops.extend(zip(nodes, nodes[1:]))
-    edge_set = {
-        (e["src"], e["dst"])
-        for e in directed_copurchase_edges(spark, sf_dir).collect()
-    }
-    bad = [h for h in hops if h not in edge_set]
-    assert not bad, f"{len(bad)} hops are not graph edges: {bad[:3]}"
-
-
 def test_chunk_rewrite_fully_duplicated_doc_reassembles_empty(spark, tmp_path):
     """The empty-reassembly branch no fixture exercises: an exact-duplicate
     document loses EVERY chunk, and both engines must agree on the empty

@@ -1,6 +1,8 @@
 """Semantic unit tests for the time-series and graph cores on literal
 graphs/series whose answers are known by hand — shapes the fixture parity
-can't isolate (gap runs, known triangle censuses, rank symmetry)."""
+can't isolate (gap runs, known triangle censuses, rank symmetry), plus
+fixture invariants of the graph loops (walks follow real edges, the WCC
+census conserves nodes)."""
 
 from __future__ import annotations
 
@@ -183,3 +185,67 @@ def test_kcore_trace_is_monotone_on_fixture(spark, sf_dir):
     for prev, cur in zip(rows, rows[1:]):
         assert cur.n_nodes <= prev.n_nodes
         assert cur.n_edges <= prev.n_edges
+
+
+def test_random_walks_traverse_real_edges(spark, sf_dir):
+    """Every consecutive hop in every walk must be an actual co-purchase
+    edge, every path must have WALK_STEPS+1 nodes, and there must be one
+    walk per reachable seed — the properties that make the corpus a valid
+    skip-gram input."""
+    from hadoopmapreduce_spark.operators.graph import (
+        WALK_STEPS,
+        directed_copurchase_edges,
+        graph_random_walks,
+    )
+
+    walks = graph_random_walks(spark, sf_dir)
+    rows = walks.collect()
+    assert rows, "no walks generated"
+    assert len(rows) == len({r["walk_id"] for r in rows})
+    hops = []
+    for r in rows:
+        nodes = [int(x) for x in r["path"].split(":")]
+        assert len(nodes) == WALK_STEPS + 1, r["path"]
+        assert nodes[0] == r["walk_id"] and nodes[-1] == r["end_node"]
+        hops.extend(zip(nodes, nodes[1:]))
+    edge_set = {
+        (e["src"], e["dst"])
+        for e in directed_copurchase_edges(spark, sf_dir).collect()
+    }
+    bad = [h for h in hops if h not in edge_set]
+    assert not bad, f"{len(bad)} hops are not graph edges: {bad[:3]}"
+
+
+def test_wcc_size_census_conserves_nodes(spark, sf_dir):
+    from hadoopmapreduce_spark.operators.graph import (
+        WCC_MIN_SUPPORT,
+        graph_wcc_components,
+    )
+    from hadoopmapreduce_spark.catalog import load_table
+
+    census = graph_wcc_components(spark, sf_dir).collect()
+    n_from_census = sum(r["size"] * r["n_components"] for r in census)
+    items = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+    a, b = items.alias("a"), items.alias("b")
+    edges = (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= WCC_MIN_SUPPORT)
+    )
+    n_nodes = (
+        edges.select(F.col("u").alias("x"))
+        .unionByName(edges.select(F.col("v").alias("x")))
+        .distinct()
+        .count()
+    )
+    assert n_from_census == n_nodes
+    assert all(r["size"] >= 2 for r in census), "edge endpoints only"
