@@ -364,7 +364,6 @@ def test_bfs_constant_plan_per_round(spark, sf_dir):
         return plan.count("Exchange")
 
     shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    assert shuffle_partitions == "8"
     d1 = bfs_relax_min(directed, sources, rounds=1)
     d3 = bfs_relax_min(directed, sources, rounds=3)
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
