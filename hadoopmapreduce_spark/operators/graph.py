@@ -1674,7 +1674,7 @@ def _louvain_best_moves(
     full weighted degree INCLUDING 2x the node's self-loop weight
     (self-loops never enter k_ic — they stay intra under any move — but
     they do count in k_i and Σ).  Total edge weight m is INVARIANT under
-    contraction, so the same m table serves both levels."""
+    contraction, so both levels read the same m."""
     tot = (
         labels.join(k, "node")
         .groupBy("community")
@@ -1850,77 +1850,103 @@ def _louvain_phase1_oracle() -> str:
     """
 
 
-def _louvain_phase1_loop(spark: SparkSession, sf_dir: str) -> dict:
-    """Run the LOUVAIN_ROUNDS phase-1 loop and return {"parts": (edges,
-    directed, k, m_count, m_df, labels0), "trace": [(round, n_proposed,
-    n_applied, q_num), ...], "labels": final checkpointed label table}.
-    Phase 1 reports the trace; phase 2, the multilevel sweep and the
-    Leiden refinement each run the loop for themselves and consume the
-    labels."""
-    edges, directed, k, m_count, m_df, labels = _louvain_graph_parts(
-        spark, sf_dir
-    )
-    parts = (edges, directed, k, m_count, m_df, labels)
-    # Q of the seed partition, computed ONCE; every later round derives
-    # its q from the exact identity ΔQ·4m² = Σ 2·gain_num over the
-    # applied (conflict-free) moves — the first draft recomputed
-    # intra/Σd² from the full graph every round and doubled the wall.  The
-    # oracle twin still derives q from the labels independently, so the
-    # driver's hash compare PROVES the identity on every round.
+def _label_edges(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """``edges`` with each endpoint's community as ``cu`` / ``cv``; the
+    (node, community) label table is broadcast to both joins."""
     lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    # the seed-partition Q inputs stay a lazy 1-row DataFrame: folded into
-    # the loop-end stats action below instead of costing their own job
-    st0_df = (
-        edges.join(F.broadcast(lu), "u")
-        .join(F.broadcast(lv), "v")
-        .where(F.col("cu") == F.col("cv"))
-        .agg(F.count(F.lit(1)).alias("intra"))
+    return edges.join(F.broadcast(lu), "u").join(F.broadcast(lv), "v")
+
+
+def _contract(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """Louvain phase 2: the community graph of ``labels`` as (u, v, w),
+    u <= v — one supernode per community, parallel edges summed into
+    one weight, intra-community edges as the supernode's self-loop."""
+    return (
+        _label_edges(edges, labels)
+        .groupBy(
+            F.least("cu", "cv").alias("u"), F.greatest("cu", "cv").alias("v")
+        )
+        .agg(F.sum("w").alias("w"))
+    )
+
+
+def _louvain_sweep(edges: DataFrame, labels: DataFrame | None, rounds: int):
+    """``rounds`` conflict-free Louvain rounds over the undirected weighted
+    edge table ``edges`` (u, v, w), self-loops allowed, from the seed
+    partition ``labels`` (node, community); ``None`` seeds every node as
+    its own community.  Returns (trace, final labels, checkpointed edges)
+    with trace rows (round, n_proposed, n_applied, q_num).
+
+    The edges, ``directed`` (the non-self edges in both directions — a
+    self-loop stays intra under any move, so it never enters k_i,c) and
+    ``k`` (w at both endpoints, so a self-loop counts twice in k_i and Σ)
+    are eagerly checkpointed.  ONE seed action reads m = Σw and the seed
+    partition's Q inputs; each round's q then follows from the exact
+    identity ΔQ·4m² = Σ 2·gain_num over its applied (conflict-free)
+    moves (recomputing intra/Σd² every round doubled the wall), and ONE
+    collect reads every round's stats.  The oracle twins
+    derive each q from the labels independently, so the exact value
+    compare proves the identity on every round."""
+    edges = edges.localCheckpoint()
+    nonself = edges.filter(F.col("u") != F.col("v"))
+    directed = (
+        nonself.selectExpr("u AS node", "v AS nbr", "w")
+        .unionAll(nonself.selectExpr("v AS node", "u AS nbr", "w"))
+        .localCheckpoint()  # consumed by links EVERY round — cut once
+    )
+    k = (
+        edges.selectExpr("u AS node", "w")
+        .unionAll(edges.selectExpr("v AS node", "w"))
+        .groupBy("node")
+        .agg(F.sum("w").alias("ki"))
+        .localCheckpoint()
+    )
+    if labels is None:
+        labels = k.select("node", F.col("node").alias("community"))
+    seed = (
+        edges.agg(F.sum("w").alias("m"))
+        .crossJoin(
+            _label_edges(edges, labels)
+            .where(F.col("cu") == F.col("cv"))
+            .agg(F.sum("w").alias("intra"))
+        )
         .crossJoin(
             labels.join(k, "node")
             .groupBy("community")
             .agg(F.sum("ki").alias("d"))
             .agg(F.sum(F.col("d") * F.col("d")).alias("sumd2"))
         )
+        .first()
     )
+    m = int(seed["m"])
+    m_df = edges.sparkSession.createDataFrame([(m,)], "m bigint")
     per_round = []
-    for r in range(1, LOUVAIN_ROUNDS + 1):
-        moves, applied, labels = _louvain_apply_round(
-            directed, labels, k, m_df
-        )
+    for _ in range(rounds):
+        moves, applied, labels = _louvain_apply_round(directed, labels, k, m_df)
         per_round.append((moves, applied))
-    # ONE stats action for the whole loop (VERDICT r13 ask #3): every
-    # round's (n_prop, n_ap, gsum) plus the seed-partition Q inputs —
-    # all community-pair-bounded aggregates over checkpointed move tables
-    st0 = st0_df.first()
-    stats = _louvain_round_stats(per_round)
-    q_cur = 4 * m_count * st0["intra"] - int(st0["sumd2"])
-    rows = []
-    for r, (n_prop, n_ap, gsum) in enumerate(stats, start=1):
-        q_cur = q_cur + 2 * gsum
-        rows.append((r, n_prop, n_ap, q_cur))
-    return {"parts": parts, "trace": rows, "labels": labels}
+    # no intra edge (a singleton seed without self-loops) sums to NULL
+    q = 4 * m * int(seed["intra"] or 0) - int(seed["sumd2"])
+    trace = []
+    for r, (n_prop, n_ap, gsum) in enumerate(
+        _louvain_round_stats(per_round), start=1
+    ):
+        q += 2 * gsum
+        trace.append((r, n_prop, n_ap, q))
+    return trace, labels, edges
 
 
-def _louvain_graph_parts(spark: SparkSession, sf_dir: str):
-    """Checkpointed inputs of the Louvain loop over the support-thresholded
-    co-purchase graph: (edges, directed, k, m_count, m_df, labels0)."""
-    edges = thresholded_copurchase_edges(spark, sf_dir).localCheckpoint()
-    directed = (
-        edges.selectExpr("u AS node", "v AS nbr", "1 AS w")
-        .unionAll(edges.selectExpr("v AS node", "u AS nbr", "1 AS w"))
-        .localCheckpoint()  # consumed by links EVERY round — cut once
-    )
-    k = directed.groupBy("node").agg(
-        F.count(F.lit(1)).alias("ki")
-    ).localCheckpoint()
-    m_count = edges.count()
-    m_df = spark.createDataFrame([(m_count,)], "m bigint")
+def _louvain_level1(spark: SparkSession, sf_dir: str):
+    """The phase-1 sweep: LOUVAIN_ROUNDS rounds over the support-thresholded
+    co-purchase graph (w = 1) from the brand seed.  Phase 1 reports its
+    trace; phase 2, the multilevel sweep and the Leiden refinement each
+    run it for themselves and consume its labels and edges."""
+    edges = thresholded_copurchase_edges(spark, sf_dir).withColumn("w", F.lit(1))
     labels = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"),
         F.col("p_brand").alias("community"),
     )
-    return edges, directed, k, m_count, m_df, labels
+    return _louvain_sweep(edges, labels, LOUVAIN_ROUNDS)
 
 
 def _stats_clean(df: DataFrame) -> DataFrame:
@@ -2083,8 +2109,8 @@ def graph_louvain_phase1(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts from singleton or fine-grained communities, so the matching
     admits millions of concurrent moves; the per-round cost is the
     move-pass linear scan plus two community-keyed aggregates, all over
-    eagerly checkpointed inputs, with ONE stats action per round
-    (crossJoined 1-row aggregates — the first draft's 4 actions/round
+    eagerly checkpointed inputs; the whole trace is read by one seed
+    action and one stats collect (the first draft's 4 actions/round
     measured 2× the wall).
 
     Rounds are BOUNDED (not run to fixpoint) so the oracle twin can
@@ -2096,10 +2122,10 @@ def graph_louvain_phase1(spark: SparkSession, sf_dir: str) -> DataFrame:
     with q_num the partition's Σ(4·m·e_c − d_c²) AFTER the round —
     strictly increasing while n_applied > 0 (pinned in tests).
 
-    The loop itself lives in ``_louvain_phase1_loop``; the trace rows
-    here are its byproduct."""
+    The loop itself is ``_louvain_sweep`` (via ``_louvain_level1``); the
+    trace rows here are its byproduct."""
     return spark.createDataFrame(
-        _louvain_phase1_loop(spark, sf_dir)["trace"],
+        _louvain_level1(spark, sf_dir)[0],
         "round int, n_proposed bigint, n_applied bigint, q_num bigint",
     )
 
@@ -2131,9 +2157,9 @@ def graph_louvain_phase2_aggregate(
     supernode's self-loop — the input to the next phase-1 sweep in the
     full Louvain recursion (Blondel et al. 2008 §2).
 
-    The phase-1 partition comes from ``_louvain_phase1_loop`` (the
-    loop ``graph_louvain_phase1`` reports), then ONE community-keyed
-    aggregate builds the contracted multigraph.  Modularity is
+    The phase-1 partition comes from ``_louvain_level1`` (the sweep
+    ``graph_louvain_phase1`` reports), then ONE community-keyed
+    aggregate (``_contract``) builds the contracted multigraph.  Modularity is
     INVARIANT under this
     contraction — Q of the weighted community graph under the identity
     partition equals Q of the phase-1 partition on the original graph
@@ -2148,24 +2174,12 @@ def graph_louvain_phase2_aggregate(
     plus two broadcast label joins and one (c_a, c_b)-keyed aggregate;
     the output is community-graph-sized — the whole point of phase 2 is
     that the next sweep runs on THIS much smaller graph."""
-    st = _louvain_phase1_loop(spark, sf_dir)
-    edges = st["parts"][0]
-    labels = st["labels"]
-    lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    return (
-        edges.join(F.broadcast(lu), "u")
-        .join(F.broadcast(lv), "v")
-        .select(
-            F.least("cu", "cv").alias("c_a"),
-            F.greatest("cu", "cv").alias("c_b"),
-            F.when(F.col("cu") == F.col("cv"), 1).otherwise(0)
-            .cast("int")
-            .alias("is_self"),
-        )
-        .groupBy("c_a", "c_b", "is_self")
-        .agg(F.count(F.lit(1)).alias("weight"))
-        .select("c_a", "c_b", "weight", "is_self")
+    _, labels, edges = _louvain_level1(spark, sf_dir)
+    return _contract(edges, labels).select(
+        F.col("u").alias("c_a"),
+        F.col("v").alias("c_b"),
+        F.col("w").alias("weight"),
+        (F.col("u") == F.col("v")).cast("int").alias("is_self"),
     )
 
 
@@ -2297,14 +2311,14 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     run ON the phase-2 contracted graph, completing the Blondel et al.
     2008 recursion over the support-thresholded co-purchase graph.
 
-    Level 1 is the ``_louvain_phase1_loop`` loop (LOUVAIN_ROUNDS
+    Level 1 is the ``_louvain_level1`` sweep (LOUVAIN_ROUNDS
     conflict-free rounds from the brand seed — the exact trace
     ``graph_louvain_phase1`` reports).  Its final partition is
     contracted exactly as ``graph_louvain_phase2_aggregate`` does
     (supernode per community, parallel edges summed to integer weights,
-    intra edges as self-loops), and level 2 reruns the SAME conflict-free
-    machinery, summing link weights, from the identity seed (each
-    supernode its own community).
+    intra edges as self-loops), and level 2 is the SAME ``_louvain_sweep``
+    over that weighted graph, from the identity seed (each supernode its
+    own community).
 
     Cross-level exactness: total edge weight and degree mass are
     invariant under contraction, so level 2 opens at q_num EXACTLY equal
@@ -2325,78 +2339,9 @@ def graph_louvain_multilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall is pure scheduling (~20 supernodes); at 100 TB the contracted
     graph still has millions of supernodes and the same conflict-free
     parallelism bound applies."""
-    st = _louvain_phase1_loop(spark, sf_dir)
-    edges = st["parts"][0]
-    m_count, m_df = st["parts"][3], st["parts"][4]
-    labels1 = st["labels"]
-    lu = labels1.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = labels1.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    ced = (
-        edges.join(F.broadcast(lu), "u")
-        .join(F.broadcast(lv), "v")
-        .select(
-            F.least("cu", "cv").alias("u2"),
-            F.greatest("cu", "cv").alias("v2"),
-        )
-        .groupBy("u2", "v2")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint()  # community-graph-sized; feeds every round
-    )
-    nonself = ced.filter(F.col("u2") != F.col("v2"))
-    directed2 = (
-        nonself.selectExpr("u2 AS node", "v2 AS nbr", "w")
-        .unionAll(nonself.selectExpr("v2 AS node", "u2 AS nbr", "w"))
-        .localCheckpoint()
-    )
-    selfw = ced.filter(F.col("u2") == F.col("v2")).selectExpr(
-        "u2 AS node", "w AS sw"
-    )
-    nodes2 = (
-        ced.selectExpr("u2 AS node")
-        .unionAll(ced.selectExpr("v2 AS node"))
-        .distinct()
-    )
-    k2 = (
-        nodes2.join(
-            directed2.groupBy("node").agg(F.sum("w").alias("ds")), "node", "left"
-        )
-        .join(selfw, "node", "left")
-        .select(
-            "node",
-            (
-                F.coalesce(F.col("ds"), F.lit(0))
-                + 2 * F.coalesce(F.col("sw"), F.lit(0))
-            ).cast("long").alias("ki"),
-        )
-        .localCheckpoint()
-    )
-    labels2 = nodes2.select("node", F.col("node").alias("community"))
-    # level-2 opening q: under the identity partition intra weight is the
-    # self-loop mass, Σd² the supernode degree masses — EXACTLY level 1's
-    # final q_num by the contraction invariance (tests pin the equality)
-    st0 = (
-        selfw.agg(F.coalesce(F.sum("sw"), F.lit(0)).alias("intra"))
-        .crossJoin(k2.agg(F.sum(F.col("ki") * F.col("ki")).alias("sumd2")))
-        .first()
-    )
-    q_cur = 4 * m_count * int(st0["intra"]) - int(st0["sumd2"])
-    rows = [(1, r, p, a, q) for (r, p, a, q) in st["trace"]]
-    for r in range(1, L2_ROUNDS + 1):
-        moves, applied, labels2 = _louvain_apply_round(
-            directed2, labels2, k2, m_df
-        )
-        stt = (
-            moves.agg(F.count(F.lit(1)).alias("n_prop"))
-            .crossJoin(
-                applied.agg(
-                    F.count(F.lit(1)).alias("n_ap"),
-                    F.coalesce(F.sum("gain_num"), F.lit(0)).alias("gsum"),
-                )
-            )
-            .first()
-        )
-        q_cur = q_cur + 2 * int(stt["gsum"])
-        rows.append((2, r, stt["n_prop"], stt["n_ap"], q_cur))
+    trace1, labels1, edges = _louvain_level1(spark, sf_dir)
+    trace2, _, _ = _louvain_sweep(_contract(edges, labels1), None, L2_ROUNDS)
+    rows = [(1, *t) for t in trace1] + [(2, *t) for t in trace2]
     return spark.createDataFrame(
         rows,
         "level int, round int, n_proposed bigint, n_applied bigint, "
@@ -2542,59 +2487,29 @@ def graph_leiden_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q1 ≥ q0 = −Σk_i² strictly as soon as anything moves); monotone by
     the same proof as phase 1.
 
-    Scale shape: identical to phase 1 (linear move scan + two
-    community-keyed aggregates per round over checkpointed inputs, the
-    one 1-row stats action), on a subgraph that is by construction a
+    Scale shape: identical to phase 1 (the same ``_louvain_sweep``: linear
+    move scan + two community-keyed aggregates per round over checkpointed
+    inputs), on a subgraph that is by construction a
     disjoint union of communities — at 100 TB the per-community pieces
     are independent and the conflict-free matching parallelizes across
     all of them at once."""
-    st = _louvain_phase1_loop(spark, sf_dir)
-    edges = st["parts"][0]
-    labels1 = st["labels"]
-    lu = labels1.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = labels1.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    iedges = (
-        edges.join(F.broadcast(lu), "u")
-        .join(F.broadcast(lv), "v")
-        .where(F.col("cu") == F.col("cv"))
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    directed = (
-        iedges.selectExpr("u AS node", "v AS nbr", "1 AS w")
-        .unionAll(iedges.selectExpr("v AS node", "u AS nbr", "1 AS w"))
-        .localCheckpoint()
-    )
-    k = directed.groupBy("node").agg(
-        F.count(F.lit(1)).alias("ki")
-    ).localCheckpoint()
-    m_count = iedges.count()
-    m_df = spark.createDataFrame([(m_count,)], "m bigint")
-    labels = directed.select("node").distinct().select(
-        "node", F.col("node").alias("community")
-    )
-    # q0 of the singleton partition: zero intra edges, so q0 = -Σ k_i²
-    q_cur = -int(
-        k.agg(F.sum(F.col("ki") * F.col("ki")).alias("s")).first()["s"]
-    )
-    rows = []
-    for r in range(1, REFINE_ROUNDS + 1):
-        moves, applied, labels = _louvain_apply_round(directed, labels, k, m_df)
-        stt = (
-            moves.agg(F.count(F.lit(1)).alias("n_prop"))
-            .crossJoin(
-                applied.agg(
-                    F.count(F.lit(1)).alias("n_ap"),
-                    F.coalesce(F.sum("gain_num"), F.lit(0)).alias("gsum"),
-                )
-            )
-            .first()
-        )
-        q_cur = q_cur + 2 * int(stt["gsum"])
-        rows.append((r, stt["n_prop"], stt["n_ap"], q_cur))
     return spark.createDataFrame(
-        rows, "round int, n_proposed bigint, n_applied bigint, q_num bigint"
+        _leiden_refinement(spark, sf_dir)[0],
+        "round int, n_proposed bigint, n_applied bigint, q_num bigint",
     )
+
+
+def _leiden_refinement(spark: SparkSession, sf_dir: str):
+    """(trace, refined labels, phase-1 labels): the singleton-seeded sweep
+    over the intra-community edges of the phase-1 partition."""
+    _, labels1, edges = _louvain_level1(spark, sf_dir)
+    intra = (
+        _label_edges(edges, labels1)
+        .where(F.col("cu") == F.col("cv"))
+        .select("u", "v", "w")
+    )
+    trace, refined, _ = _louvain_sweep(intra, None, REFINE_ROUNDS)
+    return trace, refined, labels1
 
 
 # --------------------------------------------------------------------------

@@ -60,8 +60,8 @@ HEADLINERS = [
     ("eval_bleu_components", "one explode emits 4 tagged n-gram orders; (pair, gram) hash join; conditional pivot to p1..p4"),
     # round-13 (VERDICT r12 ask #6: the two r12 post-close registrations,
     # plus this round's additions)
-    ("graph_louvain_multilevel", "level-1 phase-1 loop + phase-2 contraction + 4 weighted rounds ON the community graph; _stats_clean on every checkpoint"),
-    ("graph_leiden_refine", "intra-community edge filter (broadcast label joins) -> singleton seed -> shared conflict-free move machinery; per-round 1-row stats action"),
+    ("graph_louvain_multilevel", "level-1 sweep + phase-2 contraction, then the same sweep (4 weighted rounds) ON the community graph; _stats_clean on every label checkpoint"),
+    ("graph_leiden_refine", "intra-community edge filter (broadcast label joins) -> the shared sweep from a singleton seed; one seed action and one trace collect"),
     ("retrieval_rrf_fusion", "RRF: both ranked panels bounded; full outer join on (query, item) + one bounded window — upstream plans unchanged"),
     ("ann_lsh_eval", "LSH tuning referee: (table, sig) bucket equi-join candidates semi-joined vs exact-knn truth; counts only cross the final stage"),
     ("text_bpe_train_merges", "marked BPE round: vocab-sized pair explode + partial-agg argmax; substr-fold rewrite is pure codegen with literal pair"),
@@ -107,8 +107,8 @@ HEADLINERS = [
     ("eval_mrr_label_match", "shared broadcast probe-panel top-k; everything downstream is a panel-sized groupBy"),
     ("eval_ndcg_label_match", "same broadcast probe-panel top-k; NDCG folds per-probe over rank-indexed integers"),
     ("graph_label_propagation", "bounded LPA rounds: per-round neighbor-majority agg over the cached edge table, checkpointed labels"),
-    ("graph_louvain_phase1", "6 conflict-free move rounds over checkpointed inputs; returned trace is a LocalTableScan (rounds ran eagerly)"),
-    ("graph_louvain_phase2_aggregate", "its own phase-1 loop, then ONE community-keyed contraction aggregate over the final labels"),
+    ("graph_louvain_phase1", "the shared sweep: 6 conflict-free move rounds over checkpointed inputs; returned trace is a LocalTableScan (rounds ran eagerly)"),
+    ("graph_louvain_phase2_aggregate", "its own phase-1 sweep, then ONE community-keyed contraction aggregate over the final labels"),
     ("merge_upsert", "MERGE emulation: versioned snapshot read-back after the foldLeft of upsert batches"),
     ("streaming_join_right_outer_expiry", "stream-stream right outer join; returned plan is the margin-filtered epoch-sink read-back"),
     ("streaming_join_full_outer_expiry", "stream-stream full outer join; same epoch-sink read-back shape as the one-sided forms"),

@@ -114,7 +114,21 @@ def test_cli_sinks_share_one_persisted_frame(spark, tmp_path):
 
     seen = {e.executionId() for e in executions()}
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert main([str(imp), str(clk), str(combined), str(output)]) == 0
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    # main's get_spark re-applies its runtime confs to this shared session;
+    # put back every one it changed so later tests see the fixture's
+    # settings
+    confs = spark.conf.getAll
+    try:
+        assert main([str(imp), str(clk), str(combined), str(output)]) == 0
+    finally:
+        for key, value in spark.conf.getAll.items():
+            if confs.get(key) != value and spark.conf.isModifiable(key):
+                if key in confs:
+                    spark.conf.set(key, confs[key])
+                else:
+                    spark.conf.unset(key)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_partitions
 
     plans = [e.physicalPlanDescription() for e in executions()
              if e.executionId() not in seen]

@@ -8,7 +8,7 @@ import gc
 import time
 
 # the graph queries that materialize an intermediate table: the co-purchase
-# edges and their derivatives, the thresholded adjacency, the Louvain loop
+# edges and their derivatives, the thresholded adjacency, the Louvain sweeps
 MATERIALIZING = (
     "graph_copurchase_triangles", "graph_pagerank_int", "graph_bfs_distances",
     "graph_degree_distribution", "graph_kcore_peel_trace",
@@ -16,7 +16,7 @@ MATERIALIZING = (
     "graph_ppr_seeded", "graph_modularity_brand", "graph_random_walks",
     "graph_clustering_coefficient", "graph_label_propagation",
     "graph_harmonic_centrality", "graph_louvain_move_pass",
-    "graph_louvain_phase1",
+    "graph_louvain_phase1", "graph_leiden_refine",
 )
 
 
@@ -32,6 +32,17 @@ def _persistent_after_gc(spark, target: int, timeout: float = 30.0) -> int:
         if n <= target or time.monotonic() > deadline:
             return n
         time.sleep(0.25)
+
+
+def _resident(spark) -> str:
+    """Each persistent RDD's id, name and the head of its lineage."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    lines = []
+    for rid in sorted(int(i) for i in rdds.keySet().toArray()):
+        rdd = rdds.get(rid)
+        lineage = str(rdd.toDebugString()).splitlines()[:6]
+        lines.append(f"RDD {rid} {rdd.name()!r}:\n  " + "\n  ".join(lineage))
+    return "\n".join(lines)
 
 
 def test_graph_queries_leave_nothing_resident(spark, sf_dir, oracle_con):
@@ -53,5 +64,6 @@ def test_graph_queries_leave_nothing_resident(spark, sf_dir, oracle_con):
         assert r.ok and r.exact_values, (name, r.detail)
     del held, df
 
-    assert _persistent_after_gc(spark, start) <= start
+    n = _persistent_after_gc(spark, start)
+    assert n <= start, f"{n} persistent RDDs (start {start}):\n{_resident(spark)}"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

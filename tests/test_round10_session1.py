@@ -805,54 +805,6 @@ def test_rouge2_hand_computed_identities():
     assert f1 == 2 * 1000000 // 6
 
 
-# --- Louvain move pass -------------------------------------------------------
-
-
-def test_louvain_move_pass_planted_graph():
-    """Two planted triangles with ONE mislabeled node: exactly that node
-    must move home, with the hand-computed gain numerator
-    2m(k_ic-k_io) - k_i(Σ_c-(Σ_o-k_i)) = 24 + 4 = 28 — driven through
-    the oracle SQL so the criterion is engine-independent."""
-    import duckdb
-
-    from hadoopmapreduce_spark import registry
-
-    registry.load_all()
-    sql = registry.ORACLES["graph_louvain_move_pass"]
-    con = duckdb.connect()
-    edges = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6)]
-    rows = ", ".join(
-        f"({oid}, {u}), ({oid}, {v})" for oid, (u, v) in enumerate(edges)
-    )
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM (VALUES {rows})"
-        " t(l_orderkey, l_partkey)"
-    )
-    con.execute(
-        "CREATE VIEW part AS SELECT * FROM (VALUES "
-        "(1,'A'),(2,'A'),(3,'B'),(4,'B'),(5,'B'),(6,'B'))"
-        " t(p_partkey, p_brand)"
-    )
-    out = con.execute(sql).fetchall()
-    assert out == [(3, "B", "A", 28, 6)], out
-
-
-def test_louvain_gains_positive_and_total(spark):
-    """Every reported move carries a strictly positive gain and at most
-    one move per node (the argmax is total)."""
-    from hadoopmapreduce_spark import registry
-
-    registry.load_all()
-    rows = registry.QUERIES["graph_louvain_move_pass"](
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    assert rows, "the brand partition of a co-purchase graph has movers"
-    nodes = [r["node"] for r in rows]
-    assert len(nodes) == len(set(nodes))
-    assert all(r["gain_num"] > 0 for r in rows)
-    assert all(r["old_community"] != r["new_community"] for r in rows)
-
-
 # --- Matryoshka truncation eval ----------------------------------------------
 
 

@@ -152,111 +152,6 @@ def test_outer_margins_filter_the_boundary_band(spark, outer_results):
             assert ts_of[eid] <= bound, (eid, ts_of[eid], bound)
 
 
-# --- Louvain phase 1 (VERDICT r10 ask #6) ----------------------------------
-
-
-def test_louvain_phase1_trace_is_monotone(spark):
-    """The non-decrease pin: q_num must STRICTLY increase on every round
-    that applies a move, and hold exactly still on fixpoint rounds."""
-    rows = sorted(
-        registry.QUERIES["graph_louvain_phase1"](
-            spark, "/root/testdata/sf0.01"
-        ).collect(),
-        key=lambda r: r["round"],
-    )
-    from hadoopmapreduce_spark.operators.graph import LOUVAIN_ROUNDS
-
-    assert len(rows) == LOUVAIN_ROUNDS
-    for prev, cur in zip(rows, rows[1:]):
-        if cur["n_applied"] > 0:
-            assert cur["q_num"] > prev["q_num"], (prev, cur)
-        else:
-            assert cur["q_num"] == prev["q_num"], (prev, cur)
-    assert rows[0]["n_applied"] >= 1  # brand seed is far from optimal
-    # every round with proposals applies at least the globally best move
-    for r in rows:
-        if r["n_proposed"] > 0:
-            assert r["n_applied"] >= 1, r
-
-
-def test_louvain_phase1_beats_move_pass_start(spark):
-    """Sanity: six conflict-free rounds must improve modularity well past
-    the brand seed (sf0.01 measured 103,120 -> 1,276,360)."""
-    from hadoopmapreduce_spark.catalog import load_table
-    from hadoopmapreduce_spark.operators.graph import (
-        thresholded_copurchase_edges,
-    )
-
-    sf_dir = "/root/testdata/sf0.01"
-    rows = registry.QUERIES["graph_louvain_phase1"](spark, sf_dir).collect()
-    final_q = max(r["q_num"] for r in rows)
-    # recompute the seed partition's q directly
-    edges = thresholded_copurchase_edges(spark, sf_dir)
-    labels = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"), F.col("p_brand").alias("community")
-    )
-    lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
-    lv = labels.select(F.col("node").alias("v"), F.col("community").alias("cv"))
-    m = edges.count()
-    intra = (
-        edges.join(lu, "u").join(lv, "v")
-        .where(F.col("cu") == F.col("cv")).count()
-    )
-    directed = edges.selectExpr("u AS node").unionAll(
-        edges.selectExpr("v AS node")
-    )
-    k = directed.groupBy("node").count()
-    sumd2 = (
-        labels.join(k, "node").groupBy("community")
-        .agg(F.sum("count").alias("d"))
-        .agg(F.sum(F.col("d") * F.col("d"))).first()[0]
-    )
-    q_seed = 4 * m * intra - int(sumd2)
-    assert final_q > q_seed, (final_q, q_seed)
-
-
-def test_louvain_conflict_free_selection_is_community_unique(spark):
-    """No two applied moves may touch the same community in any role —
-    the invariant the monotonicity proof rests on.  Reconstructed from
-    the round-1 inputs."""
-    from hadoopmapreduce_spark.catalog import load_table
-    from hadoopmapreduce_spark.operators.graph import (
-        _louvain_best_moves,
-        thresholded_copurchase_edges,
-    )
-    from pyspark.sql import Window as W
-
-    sf_dir = "/root/testdata/sf0.01"
-    edges = thresholded_copurchase_edges(spark, sf_dir)
-    directed = edges.selectExpr("u AS node", "v AS nbr", "1 AS w").unionAll(
-        edges.selectExpr("v AS node", "u AS nbr", "1 AS w")
-    )
-    k = directed.groupBy("node").agg(F.count(F.lit(1)).alias("ki"))
-    m_df = edges.agg(F.count(F.lit(1)).alias("m"))
-    labels = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"), F.col("p_brand").alias("community")
-    )
-    moves = _louvain_best_moves(directed, labels, k, m_df)
-    claims = moves.select(
-        "node", "o", "c", "gain_num",
-        F.explode(F.array("o", "c")).alias("comm"),
-    )
-    wcl = W.partitionBy("comm").orderBy(F.desc("gain_num"), F.asc("node"))
-    applied = (
-        claims.withColumn("rnk", F.row_number().over(wcl))
-        .groupBy("node", "o", "c")
-        .agg(F.max("rnk").alias("mx"))
-        .filter(F.col("mx") == 1)
-        .collect()
-    )
-    assert applied
-    touched: set = set()
-    for r in applied:
-        assert r["o"] not in touched and r["c"] not in touched, r
-        touched.add(r["o"])
-        touched.add(r["c"])
-
-
 def test_topn_pandas_path_matches_fold(spark, scale_sf09_dir):
     """The Arrow-vectorized dimension-major scorer must reproduce the
     in-row fold's assignment BIT-FOR-BIT (same accumulation order, same
@@ -386,32 +281,3 @@ def test_temperature_mix_flattens_and_conserves(spark):
             assert r["factor_ppm"] > big["factor_ppm"], (r, big)
         # guarded isqrt: weight is the true integer sqrt
         assert r["weight"] ** 2 <= r["tokens"] < (r["weight"] + 1) ** 2
-
-
-def test_louvain_phase2_modularity_invariance(spark):
-    """Blondel et al.'s phase-2 invariant, in exact integers: Q of the
-    contracted community graph under the identity partition equals Q of
-    the phase-1 partition on the original graph — self-loop weight is
-    the intra count, weighted supernode degree is the community degree
-    mass."""
-    import collections
-
-    sf_dir = "/root/testdata/sf0.01"
-    agg = registry.QUERIES["graph_louvain_phase2_aggregate"](
-        spark, sf_dir
-    ).collect()
-    trace = registry.QUERIES["graph_louvain_phase1"](spark, sf_dir).collect()
-    q_final = max(r["q_num"] for r in trace)
-    m = sum(r["weight"] for r in agg)
-    intra = sum(r["weight"] for r in agg if r["is_self"] == 1)
-    deg: collections.Counter = collections.Counter()
-    for r in agg:
-        if r["is_self"]:
-            deg[r["c_a"]] += 2 * r["weight"]
-        else:
-            deg[r["c_a"]] += r["weight"]
-            deg[r["c_b"]] += r["weight"]
-    q_agg = 4 * m * intra - sum(d * d for d in deg.values())
-    assert q_agg == q_final
-    # and the contraction is real: community graph much smaller
-    assert len(agg) < m / 5

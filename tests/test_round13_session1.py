@@ -1,7 +1,7 @@
 """Round-13 session-1 pins.
 
-Covers the ADVICE r12 fixes (BLEU short-doc guard, comparator defaults,
-_stats_clean fallback warning) and the round's new operators as they land.
+Covers the ADVICE r12 fixes (BLEU short-doc guard, comparator defaults)
+and the round's new operators as they land.
 """
 
 from __future__ import annotations
@@ -652,36 +652,6 @@ def test_complete_lengths_kraft():
         lens = _complete_lengths(list(range(n)))
         assert sum(Fraction(1, 2 ** L) for L in lens.values()) == 1
     assert _complete_lengths([7]) == {7: 1}  # single-code special case
-
-
-# --- _stats_clean fallback must warn (ADVICE r12, low) -------------------------
-
-
-def test_stats_clean_fallback_warns(spark, monkeypatch, capsys):
-    """_stats_clean swallowing a JVM-surface failure silently would
-    reintroduce the minutes-per-round BigInteger stats blow-up on a Spark
-    upgrade with only a unit test noticing.  The fallback path must emit
-    one stderr warning (once per process, like bench.py's canary-failure
-    warning) so a strict bench artifact records stats cleaning was
-    inactive."""
-    from hadoopmapreduce_spark.operators import graph as G
-
-    df = spark.range(5).toDF("id")
-    monkeypatch.setattr(G, "_STATS_CLEAN_WARNED", False)
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated private-API drift")
-
-    monkeypatch.setattr(
-        G, "_internal_create_dataframe", boom, raising=True
-    )
-    out = G._stats_clean(df)
-    err = capsys.readouterr().err
-    assert out is df
-    assert "stats_clean" in err and "inactive" in err
-    # second call: warn once, not per checkpoint
-    G._stats_clean(df)
-    assert "stats_clean" not in capsys.readouterr().err
 
 
 # --- eval_pass_at_k -------------------------------------------------------------
