@@ -22,7 +22,7 @@ Both sinks come from one per-impression reduce
 (``operators.clickthru.per_impression``): one scan of both dirs and one
 shuffle on ``impressionId`` replace two DAGs that each ran a ``distinct``
 and a join.  The frame is ``persist``ed for the two writes and unpersisted
-afterwards; unlike ``localCheckpoint``, a persisted frame keeps its lineage,
+afterwards; unlike ``catalog.materialize``, a persisted frame keeps its lineage,
 so a lost block is recomputed rather than failing the job.  The group count
 comes from an ``Observation`` on the output write, not from a second run of
 the DAG, and the CTR is rendered by a JVM cast, so no Python worker starts.

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoopmapreduce_spark.catalog import materialize
+
 # the PRE-checkpoint plan of the most recent distributed_ntile call,
 # retained for plan introspection only: the checkpointed table's plan is a
 # lineage-severed LogicalRDD, so the key-construction Project (e.g. the
@@ -73,17 +75,10 @@ def distributed_ntile(
     )
     global LAST_PRECHECKPOINT
     LAST_PRECHECKPOINT = pre
-    # the prefix-count action and the returned plan both read this table.
-    # Eager localCheckpoint (not cache()) because correctness DEPENDS on
-    # both reads seeing the same partitioning: a cache-evicted block would
-    # silently recompute with a fresh range-boundary sample and fresh
-    # spark_partition_id assignment, so the collected prefix-offset map
-    # would no longer match row placement — silently wrong global ranks.
-    # A localCheckpoint severs lineage, so a lost block fails LOUDLY
-    # instead.  The returned frame is built on it, so it holds the
-    # checkpoint alive; ContextCleaner reclaims the blocks once the caller
-    # drops the result.
-    ranged = pre.localCheckpoint(eager=True)
+    # the prefix-count action and the returned plan both read this table,
+    # so both must see the same partitioning: a recomputed block would
+    # draw a fresh range-boundary sample and silently shift the ranks
+    ranged = materialize(pre)
     counts = {
         r["_pid"]: r["c"]
         for r in ranged.groupBy("_pid")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, materialize
 from hadoopmapreduce_spark.functions.numeric import (
     davg,
     dsum,
@@ -1440,7 +1440,7 @@ def _ranked_customer_revenue(spark: SparkSession, sf_dir: str):
     parts = cust.repartitionByRange(
         32, F.col("rev_cents").desc(), F.col("custkey")
     ).withColumn("pid", F.spark_partition_id())
-    parts = parts.localCheckpoint(eager=True)  # pin pids for the 2 passes
+    parts = materialize(parts)  # pin pids for the 2 passes
     sizes = {
         r["pid"]: r["n"]
         for r in parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -1841,12 +1841,12 @@ def agg_pareto_frontier_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that survives 100 TB where NOT EXISTS or a global-window-only
     sweep never could."""
     o = load_table(spark, sf_dir, "orders")
-    m = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
+    m = materialize(o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
         .cast("long")
         .alias("rev_cents"),
         F.count(F.lit(1)).alias("n_orders"),
-    ).localCheckpoint(eager=False)  # probed 3x (range, bucket maxes, prune)
+    ))  # probed 3x (range, bucket maxes, prune)
     lo, hi = m.agg(F.min("rev_cents"), F.max("rev_cents")).first()
     if lo is None:
         return m.select("custkey", "rev_cents", "n_orders").limit(0)
@@ -2046,9 +2046,9 @@ def dq_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                   percentile_disc(0.5) WITHIN GROUP (ORDER BY value) AS med
            FROM _mad_events GROUP BY 1"""
     )
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
+    dev = materialize(ev.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
-    ).localCheckpoint(eager=False)
+    ))
     dev.createOrReplaceTempView("_mad_dev")
     mad = spark.sql(
         """SELECT event_type,
@@ -2199,7 +2199,7 @@ def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines by the same comparison."""
     o = load_table(spark, sf_dir, "orders")
     max_date = o.agg(F.max("o_orderdate")).first()[0]
-    m = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
+    m = materialize(o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.datediff(F.lit(max_date), F.max("o_orderdate"))
         .cast("long")
         .alias("rec_days"),
@@ -2207,7 +2207,7 @@ def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("o_totalprice").cast("decimal(18,2)") * 100)
         .cast("long")
         .alias("mon_cents"),
-    ).localCheckpoint(eager=False)  # feeds thresholds AND scoring — one scan
+    ))  # feeds thresholds AND scoring — one scan
     m.createOrReplaceTempView("_rfm_metrics")
     thr = spark.sql(
         """SELECT
@@ -2286,7 +2286,8 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
-    nat = (
+    # 25 rows feeding parent agg + share join — one fact scan
+    nat = materialize(
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
         .groupBy(
@@ -2298,7 +2299,6 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("nation_cents")
         )
-        .localCheckpoint(eager=False)  # 25 rows feeding parent agg + share join — one fact scan
     )
     reg = nat.groupBy("regionkey").agg(
         F.sum("nation_cents").cast("long").alias("region_cents")
@@ -2471,17 +2471,16 @@ def dq_chisq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     nib = F.conv(
         F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1), 16, 10
     ).cast("int")
-    cell = (
+    # 5-row table feeding four plan branches (tot, contrib, and the
+    # replicated chi2 total's copy of each): materialized so the fact scan
+    # runs once, as the docstring promises
+    cell = materialize(
         o.select(F.col("o_orderpriority").alias("category"), nib.alias("nib"))
         .groupBy("category")
         .agg(
             F.sum(F.when(F.col("nib") < 8, 1).otherwise(0)).alias("n_a"),
             F.sum(F.when(F.col("nib") >= 8, 1).otherwise(0)).alias("n_b"),
         )
-        # 5-row table feeding four plan branches (tot, contrib, and the
-        # replicated chi2 total's copy of each) — checkpoint so the fact
-        # scan truly runs once, as the docstring promises
-        .localCheckpoint(eager=False)
     )
     tot = cell.agg(
         F.sum("n_a").cast("decimal(38,0)").alias("ta"),
@@ -2792,15 +2791,14 @@ def dq_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         (nib < 8).alias("in_a"),
     )
-    vals = (
+    # feeds the band-total collect AND the banded window — one scan
+    vals = materialize(
         base.groupBy("cents")
         .agg(
             F.sum(F.when(F.col("in_a"), 1).otherwise(0)).alias("cnt_a"),
             F.sum(F.when(F.col("in_a"), 0).otherwise(1)).alias("cnt_b"),
         )
         .withColumn("band", F.expr(f"cents div {1 << KS_BAND_SHIFT}"))
-        # feeds the band-total collect AND the banded window — one scan
-        .localCheckpoint(eager=False)
     )
     band_rows = sorted(
         vals.groupBy("band")

@@ -20,7 +20,7 @@ re-reads it (``ClickThru.java:57,75``), packing the key with sentinel strings
 ``persist``s the per-impression frame and feeds both of its sinks from it:
 :func:`combined_lines` renders job 1's byte format, :func:`ctr_lines` job 2's.
 A persisted frame keeps its lineage, so a lost cached block is recomputed
-from the input; ``localCheckpoint`` would cut the lineage and lose it.
+from the input; ``catalog.materialize`` would cut the lineage and lose it.
 
 Fidelity decisions (SURVEY.md §2.3):
   E1 malformed JSON  → null fields + corrupt counter (not stale-value reuse);

@@ -21,7 +21,7 @@ import pandas as pd  # module-level so pandas_udf type hints resolve under
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_spread, load_table
+from hadoopmapreduce_spark.catalog import load_spread, load_table, materialize
 from hadoopmapreduce_spark.registry import query
 
 # --------------------------------------------------------------------------
@@ -163,7 +163,7 @@ def ngram_jaccard_pairs(
     sh = _shingles(spark, sf_dir)
     if fraction < 1.0:
         sh = sh.filter(_audit_sample(F.col("doc_id"), fraction))
-    sh = sh.localCheckpoint(eager=False)
+    sh = materialize(sh)
     cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -371,7 +371,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 in round 5 and promoted the query from rows-only to a full
     row+schema+hash oracle), bit votes are 48 conditional sums in one
     groupBy, and the band join is equi — the same bounded-fan-out property
-    as MinHash-LSH.  Fingerprints are localCheckpoint-ed before the
+    as MinHash-LSH.  Fingerprints are materialized before the
     self-join: without it both join sides re-run the tokenize+48-sum
     aggregation (ReuseExchange doesn't always fire across the band
     explode), and at scale the fingerprint table is ~#docs rows of
@@ -401,7 +401,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long")
         )
         fp = term if fp is None else fp + term
-    fps = votes.select("doc_id", fp.alias("fp")).localCheckpoint(eager=False)
+    fps = materialize(votes.select("doc_id", fp.alias("fp")))
     band_arr = F.array(
         *[
             F.struct(
@@ -597,7 +597,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     # iterative algorithms need a lineage cut per round: labels appears
     # twice in each round's plan, so an uncut DAG doubles per iteration
-    # (2^rounds subtrees — unplannable).  localCheckpoint materializes the
+    # (2^rounds subtrees — unplannable).  ``materialize`` pins the
     # small label table on executors each round, which is exactly how
     # iterative graph algorithms run on a real cluster.  Min-propagation is
     # monotone (labels only decrease), so "no label decreased this round"
@@ -606,7 +606,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is typically 2-3 rounds) with MAX_ROUNDS as the long-chain safety
     # bound.  The per-round count() is over the checkpointed label table
     # (cluster members only — tiny relative to the corpus), not data-sized.
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize(sym)
     labels = sym.groupBy(F.col("doc_a").alias("node")).agg(
         F.least(F.col("doc_a"), F.min("doc_b")).alias("lbl")
     )
@@ -617,7 +617,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("doc_a").alias("node"))
             .agg(F.min("lbl").alias("nlbl"))
         )
-        stepped = (
+        stepped = materialize(
             labels.join(neighbor_lbls, "node", "left")
             .select(
                 "node",
@@ -626,7 +626,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))
                 ).alias("lbl"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = stepped.filter(F.col("lbl") < F.col("prev_lbl")).count()
         labels = stepped.select("node", "lbl")
@@ -658,7 +657,7 @@ def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each round is one groupBy (per-node min) + one equi-join (rewire) on
     the edge table — the same shuffle shape as a round of label
-    propagation, just fewer rounds at scale.  Per-round ``localCheckpoint``
+    propagation, just fewer rounds at scale.  A per-round ``materialize``
     cuts the iterative lineage exactly as in ``dedup_clusters``; the
     convergence probe counts changed edges (edge-table-sized, tiny vs the
     corpus — only near-dup members appear).  Output contract: one row per
@@ -675,13 +674,12 @@ def connected_components_twostar(pairs: DataFrame) -> DataFrame:
     graph through it).  Returns ``(doc_id, canonical_doc_id)`` — every
     node labeled with its component minimum."""
     # symmetric adjacency: (src, dst) both directions, no self-loops
-    edges = (
+    edges = materialize(
         pairs.unionByName(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -706,13 +704,12 @@ def connected_components_twostar(pairs: DataFrame) -> DataFrame:
         # back to symmetric adjacency, dropping the self-loops (a == b)
         # that min-of-own-neighborhood links produce for component minima
         undirected = out.filter(F.col("a") != F.col("b"))
-        return (
+        return materialize(
             undirected.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionByName(
                 undirected.select(F.col("b").alias("src"), F.col("a").alias("dst"))
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
     def signature(e: DataFrame) -> tuple:
@@ -852,7 +849,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table feeds three subtrees (counts + both join sides) — checkpointed
     once instead of recomputing the tokenize+zip_with pipeline per branch
     (measured 3.1→2.2 s at sf0.1, same as simhash's fingerprint cut)."""
-    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
+    sh = materialize(_shingles(spark, sf_dir))
     cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1208,9 +1205,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     bh = d.filter(~delta_ids).select(h.alias("h")).distinct()
     exact = dh.join(bh, "h", "left_semi").select("doc_id")
 
-    bands = _band_tuples(_minhash_sig(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    bands = materialize(_band_tuples(_minhash_sig(spark, sf_dir)))
     bd = bands.filter(delta_ids)
     bb = bands.filter(~delta_ids)
     cand = (
@@ -1225,7 +1220,7 @@ def dedup_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("d.doc_id").alias("did"), F.col("b.doc_id").alias("bid"))
         .distinct()
     )
-    sh = _shingles(spark, sf_dir).localCheckpoint(eager=False)
+    sh = materialize(_shingles(spark, sf_dir))
     cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         cand.join(sh.select(F.col("doc_id").alias("did"), "s"), "did")
@@ -1423,9 +1418,9 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle-array table feeds FOUR subtrees (freq, rarity sort, and
     # both verify sides) — cut lineage once instead of re-tokenizing per
     # branch, the same cut ngram_jaccard_pairs makes on its shingle table
-    d = docs.select(
+    d = materialize(docs.select(
         "doc_id", F.array_distinct(sh).alias("toks")
-    ).localCheckpoint(eager=False)
+    ))
     tok = d.select("doc_id", F.explode("toks").alias("tok"))
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("n_t"))
     by_rarity = tok.join(freq, "tok").groupBy("doc_id").agg(
@@ -1542,7 +1537,7 @@ def dedup_linkage_score_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded block join as dedup_fuzzy_blocking; scoring is pure codegen
     arithmetic per pair.  m·N² needs int64 only (≤ 15·N² — fine past 10⁸
     rows; DECIMAL(38,0) at 10⁹+)."""
-    c = load_table(spark, sf_dir, "customer").select(
+    c = materialize(load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
         "c_nationkey",
@@ -1552,7 +1547,7 @@ def dedup_linkage_score_fs(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div 100000"
         ).alias("bal_band"),
         F.expr("substr(c_name, 1, length(c_name) - 1)").alias("blk"),
-    ).localCheckpoint(eager=False)  # feeds 6 plan branches (count, three
+    ))  # feeds 6 plan branches (count, three
     # u-mass aggregates, both self-join sides) — one scan, not six
     n = c.agg(F.count(F.lit(1)).alias("n"))
 
@@ -2347,16 +2342,14 @@ def dedup_semantic_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns one row per vector: (vec_id, cluster, n_earlier_dups, kept).
     """
     # the probe table feeds BOTH the pair kernel and the primary-assignment
-    # join-back: one non-eager localCheckpoint per invocation (the
+    # join-back: one ``materialize`` per invocation (the
     # ann_lsh_eval recipe, VERDICT r13 ask #1) materializes the assignment
     # once instead of planning+executing the centroid/fold subtree per
     # consumer (plans/r14/dedup_semantic_multiprobe_before.txt: 32
     # Exchanges / 8 scans).  Standalone at sf0.1 on local[4], alternating
     # best-of-5: 2.84 s with it, 3.26 s without (16 jobs either way,
     # executor CPU 0.76 s vs 1.07 s).
-    probes = semantic_assignment_multiprobe(spark, sf_dir).localCheckpoint(
-        eager=False
-    )
+    probes = materialize(semantic_assignment_multiprobe(spark, sf_dir))
     pairs = (
         probes.select("cluster", "vec_id", "v")
         .groupBy("cluster")
@@ -2471,9 +2464,9 @@ def dedup_semantic_eval(
     (every side measured on the same sub-corpus)."""
     # ONE assignment build feeds every counting branch (VERDICT r13 ask
     # #1, the ann_lsh_eval recipe): the top-SEMDEDUP_NPROBE probe table is
-    # localCheckpoint-ed (non-eager, per-invocation — what a real index
-    # build materializes; recomputed on every call, never reused across
-    # runs) and the single-probe assignment is its rank-1 slice.
+    # materialized (per invocation — what a real index build materializes;
+    # recomputed on every call, never reused across runs) and the
+    # single-probe assignment is its rank-1 slice.
     # Equivalence: the top-n fold inserts with STRICTLY-GREATER at every
     # slot, so slot 1 is exactly the single-probe argmax fold (first max
     # wins, label-ascending tie-break); the derived-K pandas path computes
@@ -2488,7 +2481,7 @@ def dedup_semantic_eval(
         probes = probes.filter(
             _audit_sample(F.col("vec_id"), audit_fraction)
         )
-    probes = probes.localCheckpoint(eager=False)
+    probes = materialize(probes)
     assigned = probes.filter(F.col("probe_rank") == 1).select(
         "vec_id", "cluster", "v"
     )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_spread, load_table
+from hadoopmapreduce_spark.catalog import load_spread, load_table, materialize
 from hadoopmapreduce_spark.operators.similarity import _dot, _embeddings
 from hadoopmapreduce_spark.registry import query
 
@@ -169,9 +169,9 @@ def eval_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     acceptable for a real-valued score; the lift-table's range-repartition
     machinery is the fallback for degenerate scorers."""
     scored = _scored_docs(spark, sf_dir)
-    per_s = scored.groupBy("score_ppm").agg(
+    per_s = materialize(scored.groupBy("score_ppm").agg(
         F.count(F.lit(1)).alias("n_s")
-    ).localCheckpoint(eager=True)  # one materialization, two readers
+    ))  # one materialization, two readers
     n_total = int(per_s.agg(F.sum("n_s")).collect()[0][0])
     wd = W.orderBy(F.desc("score_ppm")).rowsBetween(W.unboundedPreceding, -1)
     off = per_s.select(

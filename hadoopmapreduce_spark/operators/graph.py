@@ -30,7 +30,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_spread, load_table
+from hadoopmapreduce_spark.catalog import load_spread, load_table, materialize
 from hadoopmapreduce_spark.registry import query
 
 # rank scale: each node starts at 1e12; teleport term is 0.15 * 1e12
@@ -54,11 +54,9 @@ _EDGES_SQL = """
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-purchase edges (u < v) from lineitem.
 
-    Checkpointed here, by the function that builds the table, so every
+    Materialized here, by the function that builds the table, so every
     branch of the calling query (degrees, joins, counts) reads one
-    materialization instead of re-running the distinct + self-join.  The
-    checkpoint belongs to the calling query: Spark's ContextCleaner frees
-    it once the query's frames are dropped."""
+    materialization instead of re-running the distinct + self-join."""
     items = (
         load_spread(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -66,7 +64,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = items.alias("a")
     b = items.alias("b")
-    return (
+    return materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -74,7 +72,6 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
-        .localCheckpoint()
     )
 
 
@@ -82,11 +79,11 @@ def directed_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both directions of the undirected edge set, checkpointed once for
     the iterative queries (BFS joins it every round)."""
     edges = copurchase_edges(spark, sf_dir)
-    return edges.select(
+    return materialize(edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint()
+    ))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -115,14 +112,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = materialize(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .localCheckpoint()
     )
     # Adjacency-intersection count: for oriented edge (a,b), every common
     # out-neighbor closes one triangle, and the orientation (acyclic total
@@ -145,7 +141,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
     if edges.count() <= BROADCAST_ADJ_MAX_EDGES:
-        adj = F.broadcast(adj.localCheckpoint(eager=True))
+        adj = F.broadcast(materialize(adj))
     n_tri = (
         oriented.join(
             adj.select(F.col("src"), F.col("nbrs").alias("a_nbrs")), "src"
@@ -357,8 +353,8 @@ def bfs_relax_min(
     arm and the propagate arm), so without a cut the physical plan doubles
     every round — 2^rounds recomputations of the base subtree (round 4's
     measured cost was 12.8 s vs PageRank's 2.5 s over the same graph, whose
-    loop references its state once and grows linearly).  A per-round eager
-    ``localCheckpoint`` severs the lineage so every round starts from a
+    loop references its state once and grows linearly).  A per-round
+    ``materialize`` severs the lineage so every round starts from a
     materialized node-count-sized table — the same discipline
     ``dedup_clusters_twostar`` uses for its star rounds.  At cluster scale
     this is one node-keyed shuffle + one label-table materialization per
@@ -370,11 +366,10 @@ def bfs_relax_min(
         ).select(
             F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(propagated)
             .groupBy("node")
             .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=True)
         )
     return dist
 
@@ -439,28 +434,26 @@ def kcore_peel_trace(
     aggregate after two semi-join-shaped filters against the node-sized
     alive set) — the same per-round cost as a BFS round.  The alive set is
     referenced twice per round (src filter + dst filter), so like
-    :func:`bfs_relax_min` it gets a per-round eager ``localCheckpoint`` —
+    :func:`bfs_relax_min` it gets a per-round ``materialize`` —
     without the cut the plan doubles per round (round-4 BFS defect class).
     Per-round census counts are scalar collects over the materialized
     node-sized table (model-state-sized, like the dedup convergence
     probes).  Rounds past the fixpoint are no-ops by construction, so a
     fixed round count is exact whenever it covers convergence."""
-    alive = (
+    alive = materialize(
         directed.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_nodes0 = alive.count()
     n_directed0 = directed.count()
     k = n_directed0 // n_nodes0 - k_offset
     trace: list[tuple[int, int, int]] = []
     for r in range(rounds + 1):
-        deg = (
+        deg = materialize(
             directed.join(alive.select(F.col("node").alias("src")), "src")
             .join(alive.select(F.col("node").alias("dst")), "dst")
             .groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=True)
         )
         n_alive = alive.count()
         tot_deg = deg.agg(
@@ -470,10 +463,9 @@ def kcore_peel_trace(
         if r < rounds:
             # nodes with zero induced edges are absent from `deg` and
             # thus (correctly) peeled: degree below any positive k
-            alive = (
+            alive = materialize(
                 deg.filter(F.col("deg") >= k)
                 .select(F.col("src").alias("node"))
-                .localCheckpoint(eager=True)
             )
     return spark.createDataFrame(
         trace, "round bigint, n_nodes bigint, n_edges bigint"
@@ -483,8 +475,8 @@ def kcore_peel_trace(
 def _kcore_oracle(rounds: int, k_offset: int) -> str:
     # MATERIALIZED CTEs are load-bearing: each round references the previous
     # alive set twice, so DuckDB's default CTE inlining doubles the plan per
-    # round — the exact lineage blow-up the Spark side cuts with per-round
-    # localCheckpoints.
+    # round — the exact lineage blow-up the Spark side cuts with a
+    # per-round ``materialize``.
     ctes = [
         "a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM directed)"
     ]
@@ -880,10 +872,9 @@ def graph_neighbor_jaccard_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node-count-sized and referenced three times (cap filter + two scoring
     # joins): checkpoint it so the aggregate over the edge table runs once,
     # not once per reference
-    deg = (
+    deg = materialize(
         directed.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
     )
     part = load_table(spark, sf_dir, "part")
     bparts = (
@@ -1006,10 +997,10 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     with_deg = directed.join(deg, "src")  # not materialized: see pagerank_int
     # seed set is model-state-sized (~1/25 of nodes); materialize it ONCE —
-    # without the eager checkpoint the part-scan + degree-agg lineage is
-    # re-executed inside every iteration's broadcast
+    # without it the part-scan + degree-agg lineage is re-executed inside
+    # every iteration's broadcast
     part = load_table(spark, sf_dir, "part")
-    seeds = (
+    seeds = materialize(
         part.join(
             F.broadcast(part.agg(F.min("p_brand").alias("mb"))),
             F.col("p_brand") == F.col("mb"),
@@ -1017,7 +1008,6 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("node"))
         .join(deg.select(F.col("src").alias("node")), "node")
         .withColumn("is_seed", F.lit(1))
-        .localCheckpoint(eager=True)
     )
     ranks = deg.select(F.col("src").alias("node")).join(
         F.broadcast(seeds), "node", "left"
@@ -1105,10 +1095,9 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     lv = labels.select(
         F.col("node").alias("v"), F.col("community").alias("cv")
     )
-    labeled = (
+    # feeds m, intra, and deg — one materialization, three consumers
+    labeled = materialize(
         edges.join(F.broadcast(lu), "u").join(F.broadcast(lv), "v")
-        # feeds m, intra, and deg — one materialization, three consumers
-        .localCheckpoint(eager=False)
     )
     m = labeled.count()
     intra = (
@@ -1192,7 +1181,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shapes: the ranked adjacency (row_number + count per src — one
     node-keyed window over the checkpointed edge table) materializes
-    ONCE via eager checkpoint and serves all {WALK_STEPS} hop joins; walk
+    ONCE via ``materialize`` and serves all {WALK_STEPS} hop joins; walk
     state is seed-set-sized and referenced once per hop (linear lineage,
     the PageRank pattern — no per-round cut needed); each hop is one
     equi-join keyed on the current node.  At 100 TB: walks ∝ seeds,
@@ -1201,7 +1190,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed = directed_copurchase_edges(spark, sf_dir)
     from pyspark.sql import Window as W
 
-    adj = directed.select(
+    adj = materialize(directed.select(
         "src",
         "dst",
         F.row_number()
@@ -1209,7 +1198,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rnk"),
         F.count(F.lit(1)).over(W.partitionBy("src")).cast("long").alias("deg"),
-    ).localCheckpoint(eager=True)
+    ))
     part = load_table(spark, sf_dir, "part")
     seeds = (
         part.join(
@@ -1326,20 +1315,19 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = materialize(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
         )
-        .localCheckpoint()
     )
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_list("dst")).alias("nbrs")
     )
     if edges.count() <= BROADCAST_ADJ_MAX_EDGES:
-        adj = F.broadcast(adj.localCheckpoint(eager=True))
+        adj = F.broadcast(materialize(adj))
     tri = (
         oriented.join(
             adj.select(F.col("src"), F.col("nbrs").alias("a_nbrs")), "src"
@@ -1434,10 +1422,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     tedges = thresholded_copurchase_edges(spark, sf_dir)
-    directed = (
+    directed = materialize(
         tedges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(tedges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
-        .localCheckpoint()
     )
     labels = directed.select("node").distinct().select(
         "node", F.col("node").alias("label")
@@ -1537,11 +1524,10 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = directed.join(
             frontier, directed["src"] == frontier["node"]
         ).select("seed", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-        frontier = (
+        frontier = materialize(
             frontier.unionAll(cand)
             .groupBy("seed", "node")
             .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint(eager=False)
         )
     return (
         frontier.filter(F.col("dist") > 0)
@@ -1881,26 +1867,24 @@ def _louvain_sweep(edges: DataFrame, labels: DataFrame | None, rounds: int):
     The edges, ``directed`` (the non-self edges in both directions — a
     self-loop stays intra under any move, so it never enters k_i,c) and
     ``k`` (w at both endpoints, so a self-loop counts twice in k_i and Σ)
-    are eagerly checkpointed.  ONE seed action reads m = Σw and the seed
+    are materialized.  ONE seed action reads m = Σw and the seed
     partition's Q inputs; each round's q then follows from the exact
     identity ΔQ·4m² = Σ 2·gain_num over its applied (conflict-free)
     moves (recomputing intra/Σd² every round doubled the wall), and ONE
     collect reads every round's stats.  The oracle twins
     derive each q from the labels independently, so the exact value
     compare proves the identity on every round."""
-    edges = edges.localCheckpoint()
+    edges = materialize(edges)
     nonself = edges.filter(F.col("u") != F.col("v"))
-    directed = (
+    directed = materialize(  # consumed by links EVERY round — cut once
         nonself.selectExpr("u AS node", "v AS nbr", "w")
         .unionAll(nonself.selectExpr("v AS node", "u AS nbr", "w"))
-        .localCheckpoint()  # consumed by links EVERY round — cut once
     )
-    k = (
+    k = materialize(
         edges.selectExpr("u AS node", "w")
         .unionAll(edges.selectExpr("v AS node", "w"))
         .groupBy("node")
         .agg(F.sum("w").alias("ki"))
-        .localCheckpoint()
     )
     if labels is None:
         labels = k.select("node", F.col("node").alias("community"))
@@ -1953,7 +1937,7 @@ def _stats_clean(df: DataFrame) -> DataFrame:
     """Re-wrap a checkpointed DataFrame's materialized RDD WITHOUT the
     origin plan's Catalyst statistics.
 
-    ``localCheckpoint`` truncates lineage but CARRIES the optimized
+    ``materialize`` truncates lineage but CARRIES the optimized
     plan's estimated stats into the resulting LogicalRDD.  In an
     iterated loop whose round plan references the evolving table
     several times multiplicatively (the Louvain move evaluation joins
@@ -2006,23 +1990,19 @@ def _internal_create_dataframe(df: DataFrame) -> DataFrame:
 
 def _louvain_apply_round(directed, labels, k, m_df):
     """One conflict-free Louvain round: (moves, applied, new_labels).
-    ``moves`` (the expensive evaluation) and ``new_labels`` are EAGERLY
-    checkpointed; ``applied`` is a cheap window over the checkpointed
-    move table and stays lazy.  The labels cannot be a lazy checkpoint:
-    the next round's move evaluation reads them from several concurrent
-    AQE jobs, the first of those to finish marks the checkpoint done and
-    drops its lineage while the others still run tasks over it, and once
-    the driver collects that plan their SQL-metric updates hit
-    non-existent accumulators (Spark logs an ERROR per update).  The
+    ``moves`` (the expensive evaluation) and ``new_labels`` go through
+    ``catalog.materialize`` (see it for why that is eager: the next
+    round's concurrent AQE jobs read the labels); ``applied`` is a cheap
+    window over the materialized move table and is not materialized.  The
     label re-wrap goes through ``_stats_clean`` so carried Catalyst
     stats cannot compound across rounds.  See graph_louvain_phase1 for
     the monotonicity argument; ``_louvain_best_moves`` serves both the
     unweighted level-1 graph and the weighted level-2 one."""
     from pyspark.sql import Window as W
 
-    moves = _louvain_best_moves(directed, labels, k, m_df).select(
+    moves = materialize(_louvain_best_moves(directed, labels, k, m_df).select(
         "node", "o", "c", "gain_num"
-    ).localCheckpoint()
+    ))
     wcl = W.partitionBy("comm").orderBy(F.desc("gain_num"), F.asc("node"))
     applied = (
         moves.select(
@@ -2039,12 +2019,12 @@ def _louvain_apply_round(directed, labels, k, m_df):
     # count per round and stats estimation goes BigInteger-quadratic —
     # see the helper's docstring for the measured blow-up
     new_labels = _stats_clean(
-        labels.join(F.broadcast(applied), "node", "left")
-        .select(
-            "node",
-            F.coalesce("new_c", "community").alias("community"),
+        materialize(
+            labels.join(F.broadcast(applied), "node", "left").select(
+                "node",
+                F.coalesce("new_c", "community").alias("community"),
+            )
         )
-        .localCheckpoint(eager=True)
     )
     return moves, applied, new_labels
 
@@ -2052,7 +2032,7 @@ def _louvain_apply_round(directed, labels, k, m_df):
 def _louvain_round_stats(per_round) -> list:
     """(n_proposed, n_applied, gain_sum) for every round in ONE action.
 
-    ``per_round`` is [(moves, applied), ...] over eagerly-checkpointed
+    ``per_round`` is [(moves, applied), ...] over materialized
     move tables; each round's two 1-row aggregates are crossJoined and the
     rounds unioned, so the whole trace costs one job instead of one
     ``first()`` per round (VERDICT r13 ask #3).  Returns
@@ -2109,13 +2089,13 @@ def graph_louvain_phase1(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts from singleton or fine-grained communities, so the matching
     admits millions of concurrent moves; the per-round cost is the
     move-pass linear scan plus two community-keyed aggregates, all over
-    eagerly checkpointed inputs; the whole trace is read by one seed
+    materialized inputs; the whole trace is read by one seed
     action and one stats collect (the first draft's 4 actions/round
     measured 2× the wall).
 
     Rounds are BOUNDED (not run to fixpoint) so the oracle twin can
     unroll the identical computation; post-fixpoint rounds emit
-    (0, 0, q) unchanged.  Per-round eager ``localCheckpoint`` on the
+    (0, 0, q) unchanged.  A per-round ``materialize`` of the
     evolving label table is the k-core/BFS lineage discipline.
 
     Returns one row per round: (round, n_proposed, n_applied, q_num)
@@ -2594,8 +2574,8 @@ def graph_boruvka_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the min selection is one node-keyed window over the
     directed edge view; each of the {BORUVKA_JUMPS} pointer jumps is a
-    component-sized self-join with an eager lineage cut
-    (localCheckpoint + _stats_clean — the iterated-checkpoint lessons
+    component-sized self-join with a lineage cut
+    (``materialize`` + _stats_clean — the iterated-checkpoint lessons
     from BFS and the Louvain loop applied from the start); the rollup
     is component-keyed.  No step touches anything bigger than the edge
     list."""
@@ -2607,7 +2587,7 @@ def graph_boruvka_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = items.alias("a"), items.alias("b")
-    e = (
+    e = materialize(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -2619,36 +2599,36 @@ def graph_boruvka_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= WCC_MIN_SUPPORT)
         .select("u", "v", F.expr("1000000 div n").cast("long").alias("d"))
-        .localCheckpoint(eager=True)
     )
     dirv = e.selectExpr("u AS c", "v AS o", "d", "u", "v").unionAll(
         e.selectExpr("v AS c", "u AS o", "d", "u", "v")
     )
     w = Window.partitionBy("c").orderBy("d", "u", "v")
-    sel = (
+    sel = materialize(
         dirv.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
-        .localCheckpoint(eager=True)
     )
     f = sel.select("c", "o")
     f2 = f.selectExpr("c AS c2", "o AS o2")
     g = _stats_clean(
-        f.join(f2, F.col("o") == F.col("c2"))
-        .select(
-            "c",
-            F.when(F.col("o2") == F.col("c"), F.least("c", "o"))
-            .otherwise(F.col("o"))
-            .alias("p"),
+        materialize(
+            f.join(f2, F.col("o") == F.col("c2")).select(
+                "c",
+                F.when(F.col("o2") == F.col("c"), F.least("c", "o"))
+                .otherwise(F.col("o"))
+                .alias("p"),
+            )
         )
-        .localCheckpoint(eager=True)
     )
     for _ in range(BORUVKA_JUMPS):
         gp = g.selectExpr("c AS cj", "p AS pj")
         g = _stats_clean(
-            g.join(gp, F.col("p") == F.col("cj"))
-            .select("c", F.col("pj").alias("p"))
-            .localCheckpoint(eager=True)
+            materialize(
+                g.join(gp, F.col("p") == F.col("cj")).select(
+                    "c", F.col("pj").alias("p")
+                )
+            )
         )
     lab = g.selectExpr("c AS node", "p AS root")
     tree = (

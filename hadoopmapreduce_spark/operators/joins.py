@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table, work_dir
+from hadoopmapreduce_spark.catalog import load_table, materialize, work_dir
 from hadoopmapreduce_spark.functions.numeric import dsum, sql_dsum
 from hadoopmapreduce_spark.registry import query
 
@@ -383,7 +383,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize under the no-broadcast conf so the executed plan is
         # the bucketed sort-merge join (conf is plan-time, not run-time)
-        out = out.localCheckpoint(eager=True)
+        out = materialize(out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     return out

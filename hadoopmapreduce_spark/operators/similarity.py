@@ -21,7 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_spread
+from hadoopmapreduce_spark.catalog import load_spread, materialize
 from hadoopmapreduce_spark.registry import query
 
 N_QUERIES = 10  # vec_id < 10 are the probe vectors
@@ -706,15 +706,14 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the argmax is a bounded top-1 (TakeOrderedAndProject), and
     only that ONE row crosses to the driver — the same bounded-scalar
     loop discipline as the IVF centroid init (`ann_ivf_topk`).  K rounds
-    = K linear scans of a CACHED projection; at 100 TB the same loop runs
-    with the selected set still tiny and the scan still the only cost.
+    = K linear scans of a MATERIALIZED projection; at 100 TB the same loop
+    runs with the selected set still tiny and the scan still the only cost.
     Distances use the fixed-order expression vv - 2*dot(x,c) + cc so
     both engines compute bit-identical doubles.
     """
-    nrm = (
+    nrm = materialize(
         _embeddings(spark, sf_dir)
         .select("vec_id", "v", _dot(F.col("v"), F.col("v")).alias("vv"))
-        .cache()
     )
     # seed at MIN(vec_id): one bounded driver scalar (fixture generations
     # differ on 0- vs 1-based ids; the oracle seeds identically)
@@ -743,7 +742,6 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         picks.append((r, int(top["vec_id"]), float(top["mind"])))
-    nrm.unpersist()
     return spark.createDataFrame(
         picks, schema="pick int, vec_id bigint, dist2 double"
     )
@@ -1455,63 +1453,57 @@ def power_iteration_loop(
     y: dict[int, int] = {}
     # one resident copy of the corpus for all iterations: each step would
     # otherwise re-run the scan+cast pipeline (6x the dominant cost at
-    # sf0.1, 5.4s -> ~2s).  Plain cache() is CORRECT here unlike in
-    # functions/ranks.py: recomputation of an evicted block reproduces
-    # identical deterministic values, and each iteration's result crosses
-    # to the driver as exact integers — nothing depends on block identity.
-    cached = e.cache()
-    try:
-        # grid pre-pass (VERDICT r9 ask #3): COUNT and MAX|v_j| are one
-        # aggregate over the corpus about to be cached anyway; both are
-        # exactly computable (no float summation), so the Python-side
-        # pi_grid_shift and the oracle's SQL twin derive the SAME q.
-        pre = cached.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(
-                F.array_max(F.transform(F.col("v"), lambda c: F.abs(c)))
-            ).alias("vmax"),
-        ).collect()[0]
-        q = pi_grid_shift(pre["n"], float(pre["vmax"] or 0.0), dim)
-        grid = float(1 << q)
-        for _ in range(iters):
-            # x rides in as ONE array literal (a single py4j call; the
-            # former per-element F.array(*[F.lit(val)]) cost 65 driver
-            # round-trips per iteration).  A broadcast 1-row-table variant
-            # (hoping to hit the codegen cache across iterations) was
-            # measured 1.6x SLOWER — the per-iteration BroadcastExchange
-            # + local-table job outweighs the recompile it avoids
-            xlit = F.lit(x)
-            d = _dot(F.col("v"), xlit)
-            # matvec via posexplode + dim-keyed hash agg.  An ungrouped
-            # 64-sum-column formulation was tried and is 1.7x SLOWER:
-            # the optimizer collapses the projection into the aggregate,
-            # duplicating the transform lambda per column (giant plan,
-            # codegen blowup).  The remaining per-iteration cost is
-            # fixed job/stage overhead, which vanishes at scale.  Map-side
-            # partial aggregation bounds what crosses the exchange to dim
-            # rows per map task, and AQE coalesces the reduce side to one
-            # task for that dim-row state.
-            rows = (
-                cached.select(d.alias("d"), F.posexplode("v").alias("j0", "vj"))
-                .select(
-                    (F.col("j0") + 1).alias("j"),
-                    F.round(F.col("vj") * F.col("d") * F.lit(grid))
-                    .cast("long")
-                    .alias("qv"),
-                )
-                .groupBy("j")
-                .agg(F.sum("qv").alias("yi"))
-                .collect()  # bounded: dim rows of model state
+    # sf0.1, 5.4s -> ~2s).
+    corpus = materialize(e)
+    # grid pre-pass (VERDICT r9 ask #3): COUNT and MAX|v_j| are one
+    # aggregate over the materialized corpus; both are
+    # exactly computable (no float summation), so the Python-side
+    # pi_grid_shift and the oracle's SQL twin derive the SAME q.
+    pre = corpus.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(
+            F.array_max(F.transform(F.col("v"), lambda c: F.abs(c)))
+        ).alias("vmax"),
+    ).collect()[0]
+    q = pi_grid_shift(pre["n"], float(pre["vmax"] or 0.0), dim)
+    grid = float(1 << q)
+    for _ in range(iters):
+        # x rides in as ONE array literal (a single py4j call; the
+        # former per-element F.array(*[F.lit(val)]) cost 65 driver
+        # round-trips per iteration).  A broadcast 1-row-table variant
+        # (hoping to hit the codegen cache across iterations) was
+        # measured 1.6x SLOWER — the per-iteration BroadcastExchange
+        # + local-table job outweighs the recompile it avoids
+        xlit = F.lit(x)
+        d = _dot(F.col("v"), xlit)
+        # matvec via posexplode + dim-keyed hash agg.  An ungrouped
+        # 64-sum-column formulation was tried and is 1.7x SLOWER:
+        # the optimizer collapses the projection into the aggregate,
+        # duplicating the transform lambda per column (giant plan,
+        # codegen blowup).  The remaining per-iteration cost is
+        # fixed job/stage overhead, which vanishes at scale.  Map-side
+        # partial aggregation bounds what crosses the exchange to dim
+        # rows per map task, and AQE coalesces the reduce side to one
+        # task for that dim-row state.
+        rows = (
+            corpus.select(d.alias("d"), F.posexplode("v").alias("j0", "vj"))
+            .select(
+                (F.col("j0") + 1).alias("j"),
+                F.round(F.col("vj") * F.col("d") * F.lit(grid))
+                .cast("long")
+                .alias("qv"),
             )
-            y = {r["j"]: int(r["yi"]) for r in rows}
-            m = max(abs(v) for v in y.values())
-            sh = max(m.bit_length() - 1, 0)
-            x = [
-                float(y.get(j, 0)) / float(2**sh)
-                for j in range(1, dim + 1)
-            ]
-    finally:
-        cached.unpersist(blocking=False)
+            .groupBy("j")
+            .agg(F.sum("qv").alias("yi"))
+            .collect()  # bounded: dim rows of model state
+        )
+        y = {r["j"]: int(r["yi"]) for r in rows}
+        m = max(abs(v) for v in y.values())
+        sh = max(m.bit_length() - 1, 0)
+        x = [
+            float(y.get(j, 0)) / float(2**sh)
+            for j in range(1, dim + 1)
+        ]
     return x, y
 
 
@@ -1634,13 +1626,12 @@ def ann_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (N_QUERIES × corpus exact scoring, the same audit-sized referee
     knn_cosine_topk already runs); the metric rollup is three counts."""
     n = _embeddings(spark, sf_dir)
-    # non-eager localCheckpoint: the signature table feeds BOTH join inputs
-    # (index side and probe side), so without the cut the 64-hyperplane
-    # plan subtree is analyzed and executed once per reference; the
-    # checkpoint materializes it exactly once per invocation (the
-    # dq_ks_drift recipe).  Signature materialization is what a real LSH
+    # the signature table feeds BOTH join inputs (index side and probe
+    # side), so without the cut the 64-hyperplane plan subtree is analyzed
+    # and executed once per reference; materialized, it runs exactly once
+    # per invocation (the dq_ks_drift recipe).  Signature materialization is what a real LSH
     # index build does — N×{LSH_TABLES} small rows.
-    sig = _lsh_sig_exact(n.select("vec_id", "v")).localCheckpoint(eager=False)
+    sig = materialize(_lsh_sig_exact(n.select("vec_id", "v")))
     probes = sig.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "table_id", "sig"
     )

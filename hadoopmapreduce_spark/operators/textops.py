@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_spread, load_table
+from hadoopmapreduce_spark.catalog import load_spread, load_table, materialize
 from hadoopmapreduce_spark.registry import query
 
 
@@ -1264,9 +1264,9 @@ def _bpe_merge_loop(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w")
     ).filter(F.col("w").rlike("^[a-z0-9]+$"))
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    v = vocab.select(
+    v = materialize(vocab.select(
         F.regexp_replace(F.col("w"), "(.)", r"#$1").alias("sym"), "freq"
-    ).localCheckpoint(eager=True)
+    ))
 
     merges: list[tuple[int, str, str, int]] = []
     for rnd in range(1, rounds + 1):
@@ -1301,7 +1301,7 @@ def _bpe_merge_loop(
                     F.regexp_replace(acc, f"#{a}$", f"#{a}{b}"),
                 ).otherwise(F.concat(acc, F.lit("#"), x)),
             )
-            v = ve.select(fold.alias("sym"), "freq").localCheckpoint(eager=True)
+            v = materialize(ve.select(fold.alias("sym"), "freq"))
     return v, merges
 
 
@@ -1321,8 +1321,8 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner embedded as a literal.  Symbol state is a flat '#'-joined
     string, so the fold accumulator is a VARCHAR in both engines (see
     _bpe_oracle on DuckDB's struct-accumulator bug) and the merge is
-    boundary-exact.  Per-round localCheckpoint cuts the iterative lineage
-    (vocab feeds both the count and the rewrite — the BFS lesson).
+    boundary-exact.  A per-round ``materialize`` cuts the iterative
+    lineage (vocab feeds both the count and the rewrite — the BFS lesson).
 
     Output: (round, lhs, rhs, merged, pair_count) — one row per learned
     merge."""
@@ -1359,7 +1359,7 @@ def text_bpe_apply_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast: a natural-text vocabulary is millions of rows at worst,
     megabytes against a corpus of terabytes).  Corpus-scale work is one
     explode + one broadcast join + one 3-group rollup; the iterative part
-    runs over the vocab with per-round localCheckpoints exactly like the
+    runs over the vocab with a per-round ``materialize`` exactly like the
     learn side."""
     v, _ = _bpe_merge_loop(spark, sf_dir, BPE_MERGE_ROUNDS, apply_all=True)
     word = F.expr("replace(sym, '#', '')")
@@ -1489,7 +1489,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     round is explode+groupBy over the distinct-word vocabulary (bounded
     by type count, not corpus size) + a 1-row argmax collect (model
     state, like the ANN centroids) + a pure-codegen fold + a 1-row
-    distinct-symbol count; per-round localCheckpoint cuts the iterative
+    distinct-symbol count; a per-round ``materialize`` cuts the iterative
     lineage exactly as the learn sibling and the Louvain loop do.  At
     100 TB the vocabulary is millions of types — still a single
     executor-comfortable table."""
@@ -1498,12 +1498,12 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w")
     ).filter(F.col("w").rlike("^[a-z0-9]+$"))
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    v = vocab.select(
+    v = materialize(vocab.select(
         F.concat(
             F.regexp_replace(F.col("w"), "(.)", r"#$1"), F.lit(BPE_EOW)
         ).alias("sym"),
         "freq",
-    ).localCheckpoint(eager=True)
+    ))
 
     trace: list[tuple[int, str, str, int, int]] = []
     for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
@@ -1548,7 +1548,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).otherwise(F.concat(acc, F.lit("#"), x)),
         )
-        v = ve.select(fold.alias("sym"), "freq").localCheckpoint(eager=True)
+        v = materialize(ve.select(fold.alias("sym"), "freq"))
         n_symbols = (
             v.select(
                 F.explode(
@@ -1691,12 +1691,12 @@ def text_wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w")
     ).filter(F.col("w").rlike("^[a-z0-9]+$"))
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-    v = vocab.select(
+    v = materialize(vocab.select(
         F.concat(
             F.regexp_replace(F.col("w"), "(.)", r"#$1"), F.lit(BPE_EOW)
         ).alias("sym"),
         "freq",
-    ).localCheckpoint(eager=True)
+    ))
 
     trace: list[tuple] = []
     for rnd in range(1, WP_TRAIN_ROUNDS + 1):
@@ -1762,7 +1762,7 @@ def text_wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).otherwise(F.concat(acc, F.lit("#"), x)),
         )
-        v = ve.select(fold.alias("sym"), "freq").localCheckpoint(eager=True)
+        v = materialize(ve.select(fold.alias("sym"), "freq"))
         trace.append(
             (
                 rnd,
@@ -1912,11 +1912,11 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized and consumed by TWO branches (bucket census + fit
     # moments) of one returned plan — without the checkpoint the corpus
     # tokenize/groupBy and global rank run twice per invocation
-    pts = ranked.select(
+    pts = materialize(ranked.select(
         (F.length(F.bin(F.col("rk"))) - 1).cast("long").alias("x"),
         (F.length(F.bin(F.col("c"))) - 1).cast("long").alias("y"),
         "c",
-    ).localCheckpoint(eager=False)
+    ))
     fit = pts.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -2545,9 +2545,9 @@ def text_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the bigram stream; `occ` is consumed twice (the bigram count AND
     # the scoring join), so it is checkpointed — without these the regex
     # tokenize+explode (the query's dominant cost) would run three times
-    tok_table = docs.select(
+    tok_table = materialize(docs.select(
         "doc_id", _tokens(F.col("text")).alias("ts")
-    ).localCheckpoint(eager=False)
+    ))
     t = tok_table.filter(F.size("ts") >= 2)
     toks = tok_table.select(F.explode(F.col("ts")).alias("term"))
     uni = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -2556,10 +2556,9 @@ def text_lm_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(F.col("ts"), 2, F.size("ts") - 1),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    occ = (
+    occ = materialize(
         t.select("doc_id", F.explode(pair_structs).alias("p"))
         .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .localCheckpoint(eager=False)
     )
     big = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_xy"))
 
@@ -2964,11 +2963,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf feeds FOUR consumers (dl, df, the query-panel join, the scoring
     # join); materialize it once — at 100 TB this checkpoint IS the
     # inverted-index build the docstring describes, not an extra cost
-    tf = (
+    tf = materialize(
         d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
@@ -3335,10 +3333,10 @@ def text_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = toks.alias("b")
     # the bigram table feeds FOUR consumers (ctx, cont, tot, the scoring
     # join); without a cut each re-derives the corpus self-join — measured
-    # 14 exchanges / 8 scans in the composed plan.  One eager checkpoint
-    # materializes the vocab²-bounded count table instead (at 100 TB this
+    # 14 exchanges / 8 scans in the composed plan.  One ``materialize``
+    # builds the vocab²-bounded count table instead (at 100 TB this
     # materialization IS the bigram model build).
-    bg = (
+    bg = materialize(
         a.join(
             b,
             (F.col("b.doc_id") == F.col("a.doc_id"))
@@ -3346,7 +3344,6 @@ def text_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("a.w").alias("w1"), F.col("b.w").alias("w2"))
         .agg(F.count(F.lit(1)).alias("c12"))
-        .localCheckpoint(eager=True)
     )
     ctx = bg.groupBy("w1").agg(
         F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fwd")

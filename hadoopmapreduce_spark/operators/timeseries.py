@@ -23,7 +23,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, materialize
 from hadoopmapreduce_spark.functions.numeric import dsum, sql_dsum
 from hadoopmapreduce_spark.registry import query
 
@@ -978,11 +978,10 @@ def km_curve(life: DataFrame) -> DataFrame:
     )
     # materialize the bounded step table BEFORE the recursion: a temp
     # view is a logical plan, so each recursion step would otherwise
-    # re-run the whole life-table DAG (steps x the input scan); the eager
-    # localCheckpoint makes every iteration a one-row join against a
-    # tiny resident LogicalRDD
+    # re-run the whole life-table DAG (steps x the input scan); materialized,
+    # every iteration is a one-row join against a tiny resident LogicalRDD
     view = f"km_steps_{next(_KM_VIEW_SEQ)}"
-    steps.localCheckpoint(eager=True).createOrReplaceTempView(view)
+    materialize(steps).createOrReplaceTempView(view)
     out = spark.sql(_KM_RECURSION.format(steps=view))
     # spark.sql analyzes eagerly, so the returned plan has already inlined
     # the view's LogicalRDD; dropping the catalog entry here releases the

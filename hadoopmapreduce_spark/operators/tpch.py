@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoopmapreduce_spark.catalog import load_table
+from hadoopmapreduce_spark.catalog import load_table, materialize
 from hadoopmapreduce_spark.functions.numeric import sql_dsum
 from hadoopmapreduce_spark.registry import query
 
@@ -865,7 +865,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     over their lineitems).  Parts whose value exceeds {Q11_FRACTION} of the
     nation's total — the HAVING-with-global-scalar-subquery pattern.
 
-    The per-part aggregate is materialized ONCE (eager localCheckpoint of
+    The per-part aggregate is materialized ONCE (``materialize`` of
     the |parts|-row table — executor memory, like dedup_clusters' rounds)
     and reused by both consumers; without the cut Spark plans the scalar
     subquery and the output branch as two independent lineitem scans
@@ -884,7 +884,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value")
         )
     )
-    value_by_part = value_by_part.localCheckpoint(eager=True)
+    value_by_part = materialize(value_by_part)
     total = value_by_part.agg(
         (F.sum(F.col("value").cast("decimal(18,4)")).cast("double") * F.lit(Q11_FRACTION)).alias(
             "threshold"

@@ -208,7 +208,7 @@ HEADLINERS = [
     ("contamination_check", "benchmark gram set broadcast; corpus grams deduped array-side before the explode — zero extra shuffle"),
     ("graph_degree_assortativity", "two broadcast degree joins on the shared cached edge table; exact-integer covariance identity"),
     ("sample_coreset_kcenter", "K bounded rounds: cached corpus scan x broadcast <=K-row center set; argmax is TakeOrderedAndProject top-1"),
-    ("graph_harmonic_centrality", "per-seed bounded-radius BFS: relax-then-min rounds keyed on (seed, node); per-round localCheckpoint"),
+    ("graph_harmonic_centrality", "per-seed bounded-radius BFS: relax-then-min rounds keyed on (seed, node); per-round materialize"),
     ("dedup_golden_record", "ER survivorship: bounded variant explode + three rule windows sharing one cluster-keyed exchange"),
     ("doc_repetition_signals", "Gopher repetition signals: gram ladders built array-side, one doc-keyed aggregate pass"),
     ("join_skew_salted", "manual skew salting: build side replicated xSALT, probe salt from pmod(hash) — one hot key spreads over SALT reducers"),

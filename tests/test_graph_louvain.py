@@ -7,9 +7,6 @@ next."""
 from __future__ import annotations
 
 import os
-import subprocess
-import sys
-import textwrap
 
 import pyspark.sql.functions as F
 import pytest
@@ -18,8 +15,6 @@ from hadoopmapreduce_spark import registry
 from hadoopmapreduce_spark.operators import graph as G
 
 registry.load_all()
-
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -288,43 +283,3 @@ def test_leiden_refine_nests_within_phase1(spark, sf_dir):
     )
     assert spans["mx"] == 1  # no refined community crosses a phase-1 one
 
-
-def test_louvain_loop_keeps_its_task_metrics(tmp_path, sf_dir):
-    """Every task of the loop reports its SQL metrics to a live
-    accumulator.  A lazily checkpointed label table is materialized by
-    whichever of the next round's concurrent AQE jobs finishes first; that
-    drops its lineage while sibling jobs still run tasks over it, and once
-    the driver collects the dropped plan Spark logs ``non-existent
-    accumulator`` for each of their metric updates.  Full GCs run
-    throughout the build and again before the write."""
-    script = tmp_path / "probe.py"
-    script.write_text(textwrap.dedent(f"""
-        import sys, threading, time
-        sys.path.insert(0, {REPO_ROOT!r})
-        from hadoopmapreduce_spark import registry
-        from hadoopmapreduce_spark.session import get_spark
-
-        spark = get_spark("louvain-metrics-probe", cpus=4)
-        registry.load_all()
-        done = threading.Event()
-
-        def collect():
-            while not done.is_set():
-                spark._jvm.System.gc()
-                time.sleep(0.05)
-
-        gc_thread = threading.Thread(target=collect)
-        gc_thread.start()
-        df = registry.QUERIES["graph_louvain_phase1"](spark, {sf_dir!r})
-        done.set()
-        gc_thread.join()
-        spark._jvm.System.gc()
-        time.sleep(1)
-        df.write.format("noop").mode("overwrite").save()
-        spark.stop()
-    """))
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
-    r = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
-                       capture_output=True, text=True, timeout=600)
-    assert r.returncode == 0, r.stderr[-3000:]
-    assert "non-existent accumulator" not in r.stderr, r.stderr[-3000:]

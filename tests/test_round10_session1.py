@@ -228,7 +228,7 @@ def test_multiprobe_assignment_is_shuffle_free(spark):
     top-2 runs as in-row folds over the 1-row broadcast centroid array —
     no corpus-side exchange, no window; the only hashpartitioning is the
     cluster-keyed exchange into the pair kernel.  The query reads its
-    probe table through a lazy localCheckpoint, so the assignment's own
+    probe table through ``catalog.materialize``, so the assignment's own
     plan is checked too."""
     from hadoopmapreduce_spark.operators.dedup import (
         dedup_semantic_multiprobe,
