@@ -23,12 +23,21 @@ MATERIALIZING = (
 def _persistent_after_gc(spark, target: int, timeout: float = 30.0) -> int:
     """Persistent RDD count after full Python and JVM collections, polled
     until it is at most ``target`` or ``timeout`` seconds pass (Spark's
-    ContextCleaner unpersists collected RDDs on its own thread)."""
+    ContextCleaner unpersists collected RDDs on its own thread).
+
+    The count is read from the context's own weak-valued map, not from
+    ``getPersistentRDDs()``: that returns a Java copy holding every RDD
+    strongly, and py4j frees it late.  Its proxy sits in a reference cycle
+    (its method cache points back at it), so only the next ``gc.collect()``
+    queues the release, which py4j's finalizer thread sends up to a second
+    later, after the next ``System.gc()``: each poll's copy would keep the
+    RDDs alive through the next poll."""
+    persistent = spark.sparkContext._jsc.sc().persistentRdds()
     deadline = time.monotonic() + timeout
     while True:
         gc.collect()
         spark._jvm.System.gc()
-        n = spark.sparkContext._jsc.getPersistentRDDs().size()
+        n = persistent.size()
         if n <= target or time.monotonic() > deadline:
             return n
         time.sleep(0.25)

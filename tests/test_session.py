@@ -50,6 +50,39 @@ def test_warm_pass_compiles_nothing(spark, sf_dir):
     assert _compiles(spark) == before
 
 
+def _task_share(heap_gib: int, cpus: int) -> float:
+    return ((heap_gib << 30) - (300 << 20)) * 0.6 / cpus
+
+
+def test_page_size_covers_task_share():
+    """Over heaps 1g-512g and 1-128 cores the page is a power of two of at
+    least 1 MiB, its page table (8192 pages) covers one task's share of
+    execution memory, and half the page would not, unless it is 1 MiB."""
+    from hadoopmapreduce_spark.session import page_size_bytes
+
+    for heap_gib in (1, 2, 4, 6, 7, 8, 15, 16, 32, 64, 128, 256, 512):
+        for cpus in (1, 2, 3, 4, 8, 16, 32, 64, 128):
+            page = page_size_bytes(f"{heap_gib}g", cpus)
+            share = _task_share(heap_gib, cpus)
+            assert page >= 1 << 20 and page & (page - 1) == 0, (heap_gib, cpus)
+            assert 8192 * page >= share, (heap_gib, cpus)
+            assert page == 1 << 20 or 8192 * (page // 2) < share, (heap_gib, cpus)
+    assert page_size_bytes("32g", 4) == 1 << 20
+    assert page_size_bytes("32g", 1) == 4 << 20
+    # a bare number is MiB, as Spark reads ``spark.driver.memory``
+    assert page_size_bytes("32768", 1) == page_size_bytes("32g", 1)
+
+
+def test_session_page_size_is_derived(spark):
+    """The test session's JVM uses the derived page, not the heap-scaled
+    default (64 MiB at a 32g heap)."""
+    from hadoopmapreduce_spark.session import page_size_bytes
+
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    jvm_page = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager().pageSizeBytes()
+    assert jvm_page == page_size_bytes(heap, 8)
+
+
 def _run_probe(tmp_path, body: str) -> None:
     """Run ``body`` from ``tmp_path`` (outside the checkout) with
     ``PYTHONPATH`` unset and a pandas-UDF query at the end."""
